@@ -34,6 +34,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from tansu_spark.materialize import corpus_checkpoint
+from tansu_spark.streaming.runner import start_foreach_batch
 
 OP_COL = "_op"
 UPSERT = "U"
@@ -121,10 +122,16 @@ class MergeTable:
         # roll up to a per-bucket max — `bucket` is a pure function of
         # the key, so first() per key is exact. The old flow spent one
         # job on validation and another on the touched-bucket distinct;
-        # the offending-key lookup moves to the (rare) error path.
+        # the offending-key lookup moves to the (rare) error path. A NULL
+        # sequence counts as its own value (count_distinct skips NULLs):
+        # it sorts last under desc, so a NULL-seq row loses to any
+        # sequenced row of its key, and only two NULLs tie.
         per_key = staged.groupBy(*self.key_cols).agg(
             F.count(F.lit(1)).alias("_n"),
-            F.count_distinct(F.col(seq_col)).alias("_ns")
+            (
+                F.count_distinct(F.col(seq_col))
+                + F.max(F.col(seq_col).isNull().cast("int"))
+            ).alias("_ns")
             if seq_col is not None
             else F.max(F.lit(0)).alias("_ns"),
             F.first("bucket").alias("bucket"),
@@ -161,6 +168,11 @@ class MergeTable:
                     .limit(1)
                     .collect()
                 )
+                if not amb:
+                    raise ValueError(
+                        f"{seq_col} does not totally order the change rows "
+                        "of some key"
+                    )
                 key = {k: amb[0][k] for k in self.key_cols}
                 raise ValueError(
                     f"change rows for key {key} share "
@@ -361,9 +373,5 @@ class MergeTable:
                 seq_col=seq_col,
             )
 
-        writer = stream.writeStream.foreachBatch(sink).option(
-            "checkpointLocation", checkpoint
-        )
-        writer = writer.trigger(**(trigger or {"availableNow": True}))
-        return writer.start()
+        return start_foreach_batch(stream, sink, checkpoint, trigger)
 

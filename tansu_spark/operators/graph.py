@@ -218,6 +218,31 @@ def _small_star(e: DataFrame, n_parts: int | None = None) -> DataFrame:
     )
 
 
+# Modulus of the signature's sum term: each addend is below 2^31, so the
+# sum stays inside a long for up to 2^32 edges.
+_SIG_MOD = 2147483647
+
+
+def _checkpoint_with_sig(df: DataFrame) -> tuple[DataFrame, tuple[int, int, int]]:
+    """Checkpoint an (a, b) edge multiset and return it with its
+    signature: count, XOR and a modular sum of the row hashes. All three
+    are order-independent; the sum keeps rows that occur an even number
+    of times, which cancel out of the XOR."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    out = df.observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(F.expr("bit_xor(xxhash64(a, b))"), F.lit(0)).alias("h"),
+        F.coalesce(
+            F.expr(f"sum(pmod(xxhash64(a, b), {_SIG_MOD}))"), F.lit(0)
+        ).alias("s"),
+    ).transform(corpus_checkpoint)
+    m = obs.get
+    return out, (int(m["n"]), int(m["h"]), int(m["s"]))
+
+
 def connected_components_star(
     edges: DataFrame,
     src: str = "src",
@@ -245,8 +270,9 @@ def connected_components_star(
       input size, not a constant tuned for one deployment) — at sf0.1
       (~100k edges) two partitions cut per-round task-scheduling
       overhead ~35%; at cluster scale the count grows with the data.
-    - Convergence = edge-multiset signature (count + XOR of 64-bit
-      hashes — order-independent and overflow-free under ANSI mode)
+    - Convergence = edge-multiset signature (count, XOR and modular sum
+      of 64-bit hashes — order-independent, duplicate-sensitive and
+      overflow-free under ANSI mode)
       stable across a round; the signature rides the checkpoint
       materialization as an Observation metric, so it costs ZERO extra
       jobs. The old canonicalization round (self-loop drop + dedup) is
@@ -285,19 +311,9 @@ def connected_components_star(
         .distinct()
     )
 
-    def checkpoint_with_sig(df: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
-        obs = Observation()
-        out = df.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.expr("bit_xor(xxhash64(a, b))"), F.lit(0)).alias("h"),
-        ).transform(corpus_checkpoint)
-        m = obs.get
-        return out, (int(m["n"]), int(m["h"]))
-
     e, sig = e0, None
     for _ in range(max_iter):
-        e, new_sig = checkpoint_with_sig(
+        e, new_sig = _checkpoint_with_sig(
             _small_star(_large_star(e, n_parts), n_parts)
         )
         if new_sig == sig:

@@ -16,7 +16,8 @@ from tansu_spark.operators.asof import asof_join
 from tansu_spark.queries import query
 from tansu_spark.queries.kafka_ops import TOPIC_CTE
 from tansu_spark.queries.tpch import _ONE, _dec
-from tansu_spark.tables import load
+from tansu_spark.streaming.runner import run_available_now
+from tansu_spark.tables import load, load_stream
 from tansu_spark.materialize import corpus_checkpoint
 
 
@@ -1029,35 +1030,14 @@ def streaming_hll_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is m ints per key regardless of cardinality; per-batch
     work is the batch's rows. The max_by(n_seen) collapse is only the
     memory-sink dedup for multi-batch availableNow splits."""
-    import os
-
     from tansu_spark.streaming.source import hll_by_key
 
-    path = os.path.join(sf_dir, "events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .select(
-            F.col("event_type").alias("key"),
-            F.col("user_id").cast("string").alias("v"),
-        )
+    stream = load_stream(spark, sf_dir, "events").select(
+        F.col("event_type").alias("key"),
+        F.col("user_id").cast("string").alias("v"),
     )
-    out = hll_by_key(stream)
-    name = "stream_hll_oracle"
-    with _scoped_shuffle_partitions(spark, 8):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(name)
+        run_available_now(hll_by_key(stream), "stream_hll_oracle", "update")
         .groupBy("key")
         .agg(
             F.max_by(
@@ -1236,15 +1216,10 @@ def streaming_cms_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: state is depth x width longs total; per-batch work is the
     batch's rows. The max_by(n_seen) collapse is the memory-sink dedup."""
-    import os
-
     from tansu_spark.functions.sketch import cms_estimate
     from tansu_spark.streaming.source import cms_by_depth
 
     depth, width = 4, 256
-    path = os.path.join(sf_dir, "events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
     buckets = F.array(
         *[
             F.struct(
@@ -1272,25 +1247,14 @@ def streaming_cms_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
+        load_stream(spark, sf_dir, "events")
         .select(F.explode(buckets).alias("b"))
         .select(F.col("b.r").alias("r"), F.col("b.col").alias("col"))
     )
-    out = cms_by_depth(stream, width=width)
-    name = "stream_cms_oracle"
-    with _scoped_shuffle_partitions(spark, 8):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     cells = (
-        spark.table(name)
+        run_available_now(
+            cms_by_depth(stream, width=width), "stream_cms_oracle", "update"
+        )
         .groupBy("r")
         .agg(F.max_by("cells", "n_seen").alias("cells"))
         .select(
@@ -1488,64 +1452,15 @@ def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale notes: complete mode is for the oracle check; production topic
     streams run the same operator in update mode with a watermark so
     state is bounded (streaming/source.py::windowed_counts)."""
-    import os
-
     from tansu_spark.streaming.source import windowed_counts
 
-    path = os.path.join(sf_dir, "events.parquet")
-    # events.ts has been TIMESTAMP(NANOS) (readable only as long, via the
-    # legacy conf) or TIMESTAMP(MICROS) across testdata generations — match
-    # tables.py::load and normalize either to an event-time timestamp.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
-    ts_is_long = schema["ts"].dataType.typeName() == "long"
-    ts_col = (
-        F.timestamp_micros(F.expr("ts div 1000"))
-        if ts_is_long
-        else F.col("ts").cast("timestamp")
-    )
-    # The streaming file source wants a directory: scan sf_dir with a
-    # glob filter selecting only the events file.
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .select(ts_col.alias("timestamp"), "event_type")
+    stream = load_stream(spark, sf_dir, "events").select(
+        F.timestamp_micros(F.expr("ts div 1000")).alias("timestamp"), "event_type"
     )
     agg = windowed_counts(stream, window="1 hour", keys=["event_type"])
-    name = "stream_tumbling_oracle"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select(
+    return run_available_now(agg, "stream_tumbling_oracle", "complete").select(
         F.col("window.start").alias("window_start"), "event_type", "n_records"
     )
-
-
-
-from contextlib import contextmanager
-
-
-@contextmanager
-def _scoped_shuffle_partitions(spark, n: int):
-    """Temporarily size spark.sql.shuffle.partitions for a streaming
-    run started inside the block. Stateful streaming creates one state
-    store per shuffle partition; at these row counts 32 stores are pure
-    overhead (measured 2.5x on the interval join), while at production
-    scale the dial goes UP with key cardinality — either way it's a
-    sizing knob, not a semantics change (results are partition-count
-    independent, which the unchanged oracle hash proves)."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 @query(
@@ -1573,30 +1488,13 @@ def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin only). The delay is set beyond the dataset's span here so
     nothing is late and the check is exact; production picks the
     replay-horizon it actually needs."""
-    import os
-
     from tansu_spark.streaming.source import dedup_stream
 
-    path = os.path.join(sf_dir, "events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
-    ts_is_long = schema["ts"].dataType.typeName() == "long"
-    ts_col = (
-        F.timestamp_micros(F.expr("ts div 1000"))
-        if ts_is_long
-        else F.col("ts").cast("timestamp")
-    )
-
     def src() -> DataFrame:
-        return (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-            .select(
-                F.col("event_id"),
-                ts_col.alias("timestamp"),
-                F.col("event_type"),
-            )
+        return load_stream(spark, sf_dir, "events").select(
+            F.col("event_id"),
+            F.timestamp_micros(F.expr("ts div 1000")).alias("timestamp"),
+            F.col("event_type"),
         )
 
     replayed = src().union(src())  # at-least-once: everything twice
@@ -1604,17 +1502,23 @@ def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         replayed, key_cols=["event_id"], watermark="3650 days"
     )
     agg = deduped.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_unique"))
-    name = "stream_dedup_oracle"
-    with _scoped_shuffle_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
+    return run_available_now(agg, "stream_dedup_oracle", "complete").select(
+        "event_type", "n_unique"
+    )
+
+
+def _event_stream(spark: SparkSession, sf_dir: str, event_type: str) -> DataFrame:
+    """One event type as a (user_id, event_id, timestamp) stream: each side
+    of the purchase/click interval joins."""
+    return (
+        load_stream(spark, sf_dir, "events")
+        .filter(F.col("event_type") == event_type)
+        .select(
+            "user_id",
+            F.col("event_id"),
+            F.timestamp_micros(F.expr("ts div 1000")).alias("timestamp"),
         )
-        q.awaitTermination()
-    return spark.table(name).select("event_type", "n_unique")
+    )
 
 
 @query(
@@ -1645,34 +1549,11 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the check is exact; production dials it to its real lateness
     budget. Key-partitioned state: the join shuffles both sides on
     user_id once — the same single-shuffle shape as the batch twin."""
-    import os
-
     from tansu_spark.streaming.join import stream_interval_join
 
-    path = os.path.join(sf_dir, "events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
-    ts_is_long = schema["ts"].dataType.typeName() == "long"
-    ts_col = (
-        F.timestamp_micros(F.expr("ts div 1000"))
-        if ts_is_long
-        else F.col("ts").cast("timestamp")
-    )
-
-    def src(event_type: str) -> DataFrame:
-        return (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-            .filter(F.col("event_type") == event_type)
-            .select(
-                "user_id", F.col("event_id"), ts_col.alias("timestamp")
-            )
-        )
-
     joined = stream_interval_join(
-        src("purchase"),
-        src("click"),
+        _event_stream(spark, sf_dir, "purchase"),
+        _event_stream(spark, sf_dir, "click"),
         key="user_id",
         l_ts="timestamp",
         r_ts="timestamp",
@@ -1688,17 +1569,7 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_timestamp").cast("long") - F.col("r_timestamp").cast("long")
         ).alias("lag_sec"),
     )
-    name = "stream_interval_join_oracle"
-    with _scoped_shuffle_partitions(spark, 8):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_available_now(out, "stream_interval_join_oracle", "append")
 
 
 @query(
@@ -1745,34 +1616,11 @@ def streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame
     the final no-data batch advances the watermark past max event time,
     so every pending negative emits and the appended result hash-equals
     the batch LEFT JOIN the oracle replays."""
-    import os
-
     from tansu_spark.streaming.join import stream_interval_join
 
-    path = os.path.join(sf_dir, "events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
-    ts_is_long = schema["ts"].dataType.typeName() == "long"
-    ts_col = (
-        F.timestamp_micros(F.expr("ts div 1000"))
-        if ts_is_long
-        else F.col("ts").cast("timestamp")
-    )
-
-    def src(event_type: str) -> DataFrame:
-        return (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-            .filter(F.col("event_type") == event_type)
-            .select(
-                "user_id", F.col("event_id"), ts_col.alias("timestamp")
-            )
-        )
-
     joined = stream_interval_join(
-        src("purchase"),
-        src("click"),
+        _event_stream(spark, sf_dir, "purchase"),
+        _event_stream(spark, sf_dir, "click"),
         key="user_id",
         l_ts="timestamp",
         r_ts="timestamp",
@@ -1790,17 +1638,7 @@ def streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame
         ).alias("lag_sec"),
         F.col("r_event_id").isNull().alias("unattributed"),
     )
-    name = "stream_interval_join_outer_oracle"
-    with _scoped_shuffle_partitions(spark, 8):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_available_now(out, "stream_interval_join_outer_oracle", "append")
 
 
 @query(
@@ -1852,32 +1690,11 @@ def streaming_interval_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     — so negatives flush only up to that min-of-both-inputs bound;
     unmatched rows inside either side's remaining horizon stay pending,
     and the oracle's WHERE clause replays exactly that bound."""
-    import os
-
     from tansu_spark.streaming.join import stream_interval_join
 
-    path = os.path.join(sf_dir, "events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
-    ts_is_long = schema["ts"].dataType.typeName() == "long"
-    ts_col = (
-        F.timestamp_micros(F.expr("ts div 1000"))
-        if ts_is_long
-        else F.col("ts").cast("timestamp")
-    )
-
-    def src(event_type: str) -> DataFrame:
-        return (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-            .filter(F.col("event_type") == event_type)
-            .select("user_id", F.col("event_id"), ts_col.alias("timestamp"))
-        )
-
     joined = stream_interval_join(
-        src("purchase"),
-        src("click"),
+        _event_stream(spark, sf_dir, "purchase"),
+        _event_stream(spark, sf_dir, "click"),
         key="user_id",
         l_ts="timestamp",
         r_ts="timestamp",
@@ -1896,17 +1713,7 @@ def streaming_interval_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("r_event_id").isNull().alias("no_click"),
         F.col("l_event_id").isNull().alias("no_purchase"),
     )
-    name = "stream_interval_join_full_oracle"
-    with _scoped_shuffle_partitions(spark, 8):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_available_now(out, "stream_interval_join_full_oracle", "append")
 
 
 @query(
@@ -1950,43 +1757,17 @@ def streaming_ewma_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys per executor; per-batch work proportional to the batch. The
     final `max_by` collapse is only the memory-sink dedup for multi-
     batch availableNow splits (update mode re-emits touched keys)."""
-    import os
-
     from tansu_spark.streaming.source import ewma_by_key
 
-    path = os.path.join(sf_dir, "events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
-    ts_is_long = schema["ts"].dataType.typeName() == "long"
-    ts_col = (
-        F.timestamp_micros(F.expr("ts div 1000"))
-        if ts_is_long
-        else F.col("ts").cast("timestamp")
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .select(
-            F.col("user_id").cast("string").alias("key"),
-            F.col("value"),
-            ts_col.alias("timestamp"),
-            F.col("event_id").alias("offset"),
-        )
+    stream = load_stream(spark, sf_dir, "events").select(
+        F.col("user_id").cast("string").alias("key"),
+        F.col("value"),
+        F.timestamp_micros(F.expr("ts div 1000")).alias("timestamp"),
+        F.col("event_id").alias("offset"),
     )
     out = ewma_by_key(stream, alpha=0.25)
-    name = "stream_ewma_oracle"
-    with _scoped_shuffle_partitions(spark, 8):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     final = (
-        spark.table(name)
+        run_available_now(out, "stream_ewma_oracle", "update")
         .groupBy("key")
         .agg(
             F.max_by(
@@ -2020,24 +1801,16 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial aggregates merge in nondeterministic order, and decimal
     addition is associative-exact where double addition is not; the
     unchanged oracle hash is the proof."""
-    import os
-
     from tansu_spark.streaming.source import enrich_stream
 
-    path = os.path.join(sf_dir, "events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
     dim = F.broadcast(
         load(spark, sf_dir, "customer").select(
             F.col("c_custkey").alias("user_id"),
             F.col("c_mktsegment").alias("segment"),
         )
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .select("user_id", "event_type", "value")
+    stream = load_stream(spark, sf_dir, "events").select(
+        "user_id", "event_type", "value"
     )
     enriched = enrich_stream(stream, dim, on="user_id", how="inner")
     agg = enriched.groupBy("segment", "event_type").agg(
@@ -2046,17 +1819,9 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("value_total"),
     )
-    name = "stream_enrich_oracle"
-    with _scoped_shuffle_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select("segment", "event_type", "n_events", "value_total")
+    return run_available_now(agg, "stream_enrich_oracle", "complete").select(
+        "segment", "event_type", "n_events", "value_total"
+    )
 
 
 @query("kmv_supplier_overlap_by_brand", plan=("single_row_broadcast",), oracle=None)  # oracle built below
@@ -3450,38 +3215,13 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: production runs the same operator in update mode with a
     watermark; state per user is one open session, merged as events
     arrive."""
-    import os
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
-    ts_is_long = schema["ts"].dataType.typeName() == "long"
-    ts_col = (
-        F.timestamp_micros(F.expr("ts div 1000"))
-        if ts_is_long
-        else F.col("ts").cast("timestamp")
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .select("user_id", ts_col.alias("timestamp"))
+    stream = load_stream(spark, sf_dir, "events").select(
+        "user_id", F.timestamp_micros(F.expr("ts div 1000")).alias("timestamp")
     )
     agg = stream.groupBy(
         F.session_window("timestamp", "30 minutes"), "user_id"
     ).agg(F.count(F.lit(1)).alias("n_events"))
-    name = "stream_session_oracle"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from pyspark.sql import Window
-
-    out = spark.table(name).select(
+    out = run_available_now(agg, "stream_session_oracle", "complete").select(
         "user_id",
         F.col("session_window.start").alias("session_start"),
         F.col("session_window.end").alias("raw_end"),
@@ -4020,36 +3760,15 @@ def streaming_kmv_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: state is <= 64 longs per key; per-batch work is one md5 per
     row. The max_by(n_seen) collapse is the memory-sink dedup."""
-    import os
-
     from tansu_spark.functions.sketch import _estimate
     from tansu_spark.streaming.source import kmv_by_key
 
-    path = os.path.join(sf_dir, "events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .select(
-            F.col("event_type").alias("key"),
-            F.col("user_id").cast("string").alias("v"),
-        )
+    stream = load_stream(spark, sf_dir, "events").select(
+        F.col("event_type").alias("key"),
+        F.col("user_id").cast("string").alias("v"),
     )
-    out = kmv_by_key(stream, k=64)
-    name = "stream_kmv_oracle"
-    with _scoped_shuffle_partitions(spark, 8):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     final = (
-        spark.table(name)
+        run_available_now(kmv_by_key(stream, k=64), "stream_kmv_oracle", "update")
         .groupBy("key")
         .agg(F.max_by(F.struct("n_hashes", "uk"), "n_seen").alias("_f"))
         .select(

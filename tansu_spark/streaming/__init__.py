@@ -9,6 +9,7 @@ from tansu_spark.streaming.source import (
     windowed_counts,
 )
 from tansu_spark.streaming.generator import generate_batch, generator_stream
+from tansu_spark.streaming.runner import run_available_now, start_foreach_batch
 
 __all__ = [
     "topic_stream",
@@ -21,4 +22,6 @@ __all__ = [
     "sessionize",
     "generate_batch",
     "generator_stream",
+    "run_available_now",
+    "start_foreach_batch",
 ]

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tansu_spark.broker.state import read_json, write_json_atomic
+from tansu_spark.streaming.runner import start_foreach_batch
 
 _MERGEABLE = {"count": F.sum, "sum": F.sum, "min": F.min, "max": F.max}
 
@@ -183,8 +184,4 @@ class IncrementalView:
         def sink(batch: DataFrame, batch_id: int) -> None:
             self.apply_batch(transform(batch) if transform else batch, batch_id)
 
-        writer = stream.writeStream.foreachBatch(sink).option(
-            "checkpointLocation", checkpoint
-        )
-        writer = writer.trigger(**(trigger or {"availableNow": True}))
-        return writer.start()
+        return start_foreach_batch(stream, sink, checkpoint, trigger)

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tansu_spark.broker.broker import RECORD_SCHEMA, Broker
+from tansu_spark.streaming.runner import start_foreach_batch
 
 
 def topic_stream(
@@ -50,11 +51,7 @@ def stream_to_topic(
             topic, batch, producer_id=producer_id, base_sequence=batch_id
         )
 
-    writer = stream.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint
-    )
-    writer = writer.trigger(**(trigger or {"availableNow": True}))
-    return writer.start()
+    return start_foreach_batch(stream, sink, checkpoint, trigger)
 
 
 def stream_to_lake(broker: Broker, sink, topic: str, checkpoint: str, trigger=None):
@@ -66,11 +63,7 @@ def stream_to_lake(broker: Broker, sink, topic: str, checkpoint: str, trigger=No
     def step(_batch: DataFrame, _batch_id: int) -> None:
         sink.store(topic)
 
-    writer = stream.writeStream.foreachBatch(step).option(
-        "checkpointLocation", checkpoint
-    )
-    writer = writer.trigger(**(trigger or {"availableNow": True}))
-    return writer.start()
+    return start_foreach_batch(stream, step, checkpoint, trigger)
 
 
 # ------------------------------------------------------- event-time extensions

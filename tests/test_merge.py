@@ -121,6 +121,27 @@ def test_merge_duplicate_keys_require_seq(spark, tmp_path):
         t.merge(tied, seq_col="seq")
 
 
+def test_merge_null_seq_is_its_own_sequence_value(spark, tmp_path):
+    """A NULL sequence sorts last: it loses to a sequenced row of the same
+    key, and two NULL-sequence rows of one key tie."""
+    t = _table(spark, tmp_path)
+    schema = "id long, name string, x double, _op string, seq int"
+    t.merge(
+        spark.createDataFrame(
+            [(3, "unsequenced", 1.0, UPSERT, None), (3, "sequenced", 2.0, UPSERT, 1)],
+            schema,
+        ),
+        seq_col="seq",
+    )
+    assert _rows(t)[3] == ("sequenced", 2.0)
+
+    tied = spark.createDataFrame(
+        [(5, "x", 1.0, UPSERT, None), (5, "y", 2.0, UPSERT, None)], schema
+    )
+    with pytest.raises(ValueError, match="share seq"):
+        t.merge(tied, seq_col="seq")
+
+
 def test_merge_into_empty_table(spark, tmp_path):
     t = MergeTable(spark, str(tmp_path / "e"), ["id"], n_buckets=4)
     t.merge(

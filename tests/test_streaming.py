@@ -465,3 +465,51 @@ def test_ewma_batch_twin_filters_dirty_values(broker):
     assert out["a"]["n_events"] == len(clean)
     assert math.isclose(out["a"]["ewma"], e, rel_tol=0, abs_tol=1e-12)
     assert math.isclose(out["a"]["max_deviation"], m, rel_tol=0, abs_tol=1e-12)
+
+
+def _events_nanos(sf_dir, out_dir) -> None:
+    """The sf events file with ts rewritten as TIMESTAMP(NANOS) — INT64
+    nanoseconds, with sub-microsecond digits so truncation would show."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    us = t["ts"].cast(pa.int64()).to_numpy()
+    ns = pa.array(us * 1000 + t["event_id"].to_numpy() % 1000, pa.timestamp("ns"))
+    t = t.set_column(t.schema.get_field_index("ts"), "ts", ns)
+    pq.write_table(t, os.path.join(out_dir, "events.parquet"), version="2.6")
+
+
+@pytest.mark.parametrize("ts_type", ["micros", "nanos"])
+def test_load_stream_matches_load(spark, sf_dir, tmp_path, ts_type):
+    """Both events loaders honour the ts contract (BIGINT nanoseconds)
+    for either physical type, so a drained stream equals the batch read."""
+    from tansu_spark.streaming import run_available_now
+    from tansu_spark.tables import load, load_stream
+
+    if ts_type == "nanos":
+        _events_nanos(sf_dir, str(tmp_path))
+        sf_dir = str(tmp_path)
+    batch = load(spark, sf_dir, "events")
+    streamed = run_available_now(
+        load_stream(spark, sf_dir, "events"), f"load_stream_{ts_type}", "append"
+    )
+    assert dict(batch.dtypes)["ts"] == dict(streamed.dtypes)["ts"] == "bigint"
+    want = sorted(map(tuple, batch.collect()))
+    assert want and sorted(map(tuple, streamed.collect())) == want
+    if ts_type == "nanos":
+        assert any(r[1] % 1000 for r in want)  # nanosecond digits survive
+
+
+def test_run_available_now_restores_shuffle_partitions_on_failure(spark, sf_dir):
+    from tansu_spark.streaming import run_available_now
+    from tansu_spark.tables import load_stream
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    failing = load_stream(spark, sf_dir, "events").select(
+        F.raise_error(F.lit("boom")).alias("x")
+    )
+    with pytest.raises(Exception, match="boom"):
+        run_available_now(failing, "run_available_now_failing", "append")
+    assert spark.conf.get(key) == before
