@@ -19,6 +19,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from tansu_spark.harness import release, timed  # noqa: E402
 from tansu_spark.queries import QUERIES  # noqa: E402
 from tansu_spark.session import get_spark  # noqa: E402
 
@@ -83,6 +84,74 @@ def scaling_probe(spark) -> float:
     return round(time.perf_counter() - t0, 4)
 
 
+# Canonical-stamp guard (r9 verdict ask #2): the r9 artifact was taken
+# in a ~2.7x-contended window (scan control 1.169s vs the 0.41s r1
+# anchor) and read as a fake 1.5x regression. Refuse the stamp when the
+# controls deviate from their quiet-window anchors so a contaminated
+# run is self-labeled instead of judged at face value.
+SCAN_CONTROL_ANCHOR_S = 0.41  # tpch_q6, unchanged since r1
+# 32-task JVM agg, quiet-window r8/r9, at 32 cores (one scheduling
+# wave). At fewer cores the same probe legitimately needs
+# ceil(32/cores) waves; measured points: 0.33s cold at 32 cores,
+# 0.41s cold at 8 cores (BENCH_r10_c8) -> ~0.03s per extra wave.
+PARALLEL_PROBE_ANCHOR_S = 0.33
+# The same probe with the JVM warm (mid-run): 0.15s at 32 cores, ~0.24s
+# at 8 cores — the same ~0.03s per extra wave as the cold anchor.
+WARM_PROBE_ANCHOR_S = 0.15
+WAVE_S = 0.03
+
+
+def contamination_flags(
+    scan_control_s: float | None,
+    par_probe_s: float,
+    midrun_probes: list[dict],
+    parallelism: int,
+    midrun_anchor_s: float | None = None,
+) -> tuple[list[str], float | None]:
+    """The canonical-stamp rules as one pure function: ``(flags,
+    midrun_anchor_s)``; an empty ``flags`` means the run is canonical.
+
+    Mid-run probes gate against a WARM anchor: the cold endpoint anchor
+    lets steal windows that inflate query blocks 1.5-4x hide, because
+    with the JVM warm the 32-task probe runs in ~0.13-0.19s at 32 cores.
+    Two warm gates apply:
+    - the run-derived floor, THIS run's cleanest mid-run probe (r10
+      verdict ask #1): a steal window inflates some probes while the
+      clean ones set the floor, at any core count (``midrun_anchor_s``
+      overrides it for hosts where the floor is known);
+    - an absolute warm floor scaled by scheduling waves, because a
+      uniformly contended run inflates its own floor and would never be
+      flagged by the first gate alone.
+    """
+    waves = -(-32 // max(1, parallelism))
+    par_anchor_s = PARALLEL_PROBE_ANCHOR_S + WAVE_S * (waves - 1)
+    warm_anchor_s = WARM_PROBE_ANCHOR_S + WAVE_S * (waves - 1)
+    flags = []
+    if scan_control_s is not None and scan_control_s > 1.5 * SCAN_CONTROL_ANCHOR_S:
+        flags.append(
+            f"scan_control {scan_control_s:.3f}s > 1.5x anchor {SCAN_CONTROL_ANCHOR_S}s"
+        )
+    if par_probe_s > 2.0 * par_anchor_s:
+        flags.append(
+            f"parallel_probe {par_probe_s:.3f}s > 2x anchor {par_anchor_s:.2f}s"
+        )
+    if midrun_anchor_s is None and midrun_probes:
+        midrun_anchor_s = min(m["parallel_probe_s"] for m in midrun_probes)
+    for m in midrun_probes:
+        p, n = m["parallel_probe_s"], m["after_n"]
+        if p > 2.0 * midrun_anchor_s:
+            flags.append(
+                f"midrun parallel_probe {p:.3f}s after query {n}"
+                f" > 2x warm anchor {midrun_anchor_s:.3f}s"
+            )
+        elif p > 2.0 * warm_anchor_s:
+            flags.append(
+                f"midrun parallel_probe {p:.3f}s after query {n}"
+                f" > 2x warm floor {warm_anchor_s:.2f}s ({waves} waves)"
+            )
+    return flags, midrun_anchor_s
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     probe_s = cpu_probe()
@@ -99,28 +168,8 @@ def main() -> None:
     # Warm up the JVM + parquet footer cache on the smallest query.
     QUERIES[names[0]](spark, sf_dir).collect()
 
-    def release_cached() -> None:
-        # Iterative operators (connected components, k-means IVF) pin
-        # localCheckpoint blocks that outlive their query; drop them so
-        # query N+1 is not taxed by query N's leftovers. The shared dedup
-        # chain (queries/pipeline.py::_dedup_chain) is deliberately NOT a
-        # leftover — its checkpoints are the materialized pair/component
-        # tables the whole dedup family reads; unpersisting them would
-        # force every member to re-run LSH -> verify -> CC from scratch.
-        from tansu_spark.queries.pipeline import dedup_chain_protected_ids
-
-        keep = dedup_chain_protected_ids()
-        spark.catalog.clearCache()
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-        while it.hasNext():
-            e = it.next()
-            if int(e._1()) not in keep:
-                e._2().unpersist(False)
-
     timings: dict[str, float] = {}
     jobs: dict[str, int] = {}
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
     # Mid-run contamination probes (optimization r10): the start/end
     # probes twice this round bracketed a hypervisor-steal window that
     # inflated contiguous query blocks 1.5-4x while both endpoint probes
@@ -133,22 +182,16 @@ def main() -> None:
     MIDRUN_EVERY = 40
     midrun_probes: list[dict] = []
     for qi, name in enumerate(names):
-        release_cached()
+        # Query N+1 must not be taxed by query N's leftovers; the session
+        # caches' shared builds survive (tansu_spark/harness.py).
+        release(spark)
         # Jobs-per-query (r6 verdict ask #1c): serial driver-side job
         # chains (collect-train-then-serve) are invisible in wall time
-        # alone but dominate under host contention. Job-group tagging
-        # counts the jobs the query's own thread submits; broadcast-
-        # exchange jobs run on pool threads and don't inherit the group,
-        # so this is a floor — exactly the serial-chain signal we want.
-        sc.setJobGroup(f"q:{name}", name)
-        t0 = time.perf_counter()
-        QUERIES[name](spark, sf_dir).collect()
-        timings[name] = round(time.perf_counter() - t0, 3)
-        # Clear the group BEFORE the next iteration's release_cached():
-        # jobs triggered during cache release (or after the loop) must not
-        # be attributed to this query's job count.
-        sc._jsc.clearJobGroup()
-        jobs[name] = len(tracker.getJobIdsForGroup(f"q:{name}"))
+        # alone but dominate under host contention.
+        sec, jobs[name] = timed(
+            spark, name, lambda: QUERIES[name](spark, sf_dir).collect()
+        )
+        timings[name] = round(sec, 3)
         if (qi + 1) % MIDRUN_EVERY == 0 and qi + 1 < len(names):
             midrun_probes.append(
                 {
@@ -202,58 +245,14 @@ def main() -> None:
         "midrun_probes": midrun_probes,
     }
 
-    # Canonical-stamp guard (r9 verdict ask #2): the r9 artifact was taken
-    # in a ~2.7x-contended window (scan control 1.169s vs the 0.41s r1
-    # anchor) and read as a fake 1.5x regression. Refuse the stamp when the
-    # controls deviate from their quiet-window anchors so a contaminated
-    # run is self-labeled instead of judged at face value.
-    SCAN_CONTROL_ANCHOR_S = 0.41   # tpch_q6, unchanged since r1
-    # 32-task JVM agg, quiet-window r8/r9, at 32 cores (one scheduling
-    # wave). At fewer cores the same probe legitimately needs
-    # ceil(32/cores) waves; measured points: 0.33s cold at 32 cores,
-    # 0.41s cold at 8 cores (BENCH_r10_c8) -> ~0.03s per extra wave.
-    PARALLEL_PROBE_ANCHOR_S = 0.33
-    waves = -(-32 // max(1, spark.sparkContext.defaultParallelism))
-    par_anchor_s = PARALLEL_PROBE_ANCHOR_S + 0.03 * (waves - 1)
-    contamination = []
-    sc = calibration["scan_control_s"]
-    if sc is not None and sc > 1.5 * SCAN_CONTROL_ANCHOR_S:
-        contamination.append(
-            f"scan_control {sc:.3f}s > 1.5x anchor {SCAN_CONTROL_ANCHOR_S}s"
-        )
-    if par_probe_s > 2.0 * par_anchor_s:
-        contamination.append(
-            f"parallel_probe {par_probe_s:.3f}s > 2x anchor {par_anchor_s:.2f}s"
-        )
-    # Mid-run probes gate against a WARM anchor: the cold endpoint anchor
-    # (0.33s) lets steal windows that inflate query blocks 1.5-4x hide,
-    # because with the JVM warm the same 32-task probe runs in
-    # ~0.13-0.19s. r10 hard-coded the warm anchor at 0.15s — a 32-core,
-    # this-host constant that spuriously flagged the driver's legitimate
-    # 8-core run (warm floor there is ~0.24s). The anchor is now derived
-    # from THIS run's own cleanest mid-run probe (per r10 verdict ask #1 /
-    # ADVICE): a steal window inflates some probes while the clean ones
-    # set the floor, at any core count. A uniformly-contended run has no
-    # clean floor to derive — that case is what the ABSOLUTE endpoint
-    # anchors above (scan control, cold parallel probe) still catch.
-    # SPARK_GRAFT_MIDRUN_ANCHOR_S overrides the derivation for hosts where
-    # the floor is known.
     env_anchor = os.environ.get("SPARK_GRAFT_MIDRUN_ANCHOR_S")
-    if env_anchor is not None:
-        midrun_anchor_s = float(env_anchor)
-    elif midrun_probes:
-        midrun_anchor_s = min(m["parallel_probe_s"] for m in midrun_probes)
-    else:
-        midrun_anchor_s = None
-    calibration["midrun_anchor_s"] = midrun_anchor_s
-    if midrun_anchor_s is not None:
-        for m in midrun_probes:
-            if m["parallel_probe_s"] > 2.0 * midrun_anchor_s:
-                contamination.append(
-                    f"midrun parallel_probe {m['parallel_probe_s']:.3f}s"
-                    f" after query {m['after_n']} > 2x warm anchor"
-                    f" {midrun_anchor_s:.3f}s"
-                )
+    contamination, calibration["midrun_anchor_s"] = contamination_flags(
+        calibration["scan_control_s"],
+        par_probe_s,
+        midrun_probes,
+        spark.sparkContext.defaultParallelism,
+        float(env_anchor) if env_anchor is not None else None,
+    )
 
     detail = {
         "metric": "all_queries_wall",

@@ -573,10 +573,10 @@ class GroupCoordinator:
         member_id: str = "",
         now: float | None = None,
     ) -> ErrorCode:
-        M.add("coordinator_requests", method="offset_commit")
         """Generation-fenced offset commit (offset_commit_fence,
         administrator.rs:1804-1843), landing in the broker's durable
         cursor store on success."""
+        M.add("coordinator_requests", method="offset_commit")
         now = time.time() if now is None else now
         with self._lock():
             g = self._group(group_id)

@@ -14,14 +14,17 @@ Contract (unchanged from the r8-r10 pattern the bench and tests pin):
   materialization order (a chain must checkpoint stage N before building
   stage N+1 from it); the cache owns the registry bookkeeping.
 - The hit path is a DRIVER-side probe, zero Spark jobs: the value is
-  healthy iff every backing RDD id is still in the persistent-RDD
-  registry. An external unpersist (bench.py's between-query release, a
-  manual clearCache) removes it from exactly that registry, so the next
-  call rebuilds instead of raising.
-- ``all_protected_ids()`` is what bulk-unpersist callers (bench.py's
-  ``release_cached`` via ``pipeline.dedup_chain_protected_ids``) must
-  skip: the union of every live cache entry's backing RDD ids, per-key so
-  a rebuild/evict drops its stale ids.
+  healthy iff every backing RDD is still in the persistent-RDD registry
+  (a ``localCheckpoint``) or its reliable checkpoint file still exists
+  (``corpus_checkpoint`` under ``SPARK_GRAFT_CHECKPOINT_DIR``; reliable
+  checkpoints never enter the registry). An external unpersist (a
+  manual clearCache, a release that ignores the protected set) or a
+  deleted checkpoint directory makes the next call rebuild instead of
+  raising.
+- ``all_protected_ids()`` is what bulk-unpersist callers
+  (``harness.release``) must skip: the union of every live cache
+  entry's backing RDD ids, per-key so a rebuild/evict drops its stale
+  ids.
 """
 
 from __future__ import annotations
@@ -35,14 +38,37 @@ def _persistent_rdd_ids(spark) -> set:
     return out
 
 
-def _checkpoint_rdd_id(df) -> int | None:
-    """The persisted RDD id behind a localCheckpoint'ed DataFrame: its
-    analyzed plan is a LogicalRDD whose `rdd` field IS the checkpointed
-    (persisted) RDD — the id the persistent-RDD registry tracks."""
+def _checkpoint_rdd(df):
+    """The RDD behind a checkpointed DataFrame: its analyzed plan is a
+    LogicalRDD whose `rdd` field IS the checkpointed RDD — persisted (the
+    id the persistent-RDD registry tracks) for a localCheckpoint, backed
+    by a checkpoint file for a reliable one. None for any other frame."""
     try:
-        return int(df._jdf.queryExecution().analyzed().rdd().id())
+        return df._jdf.queryExecution().analyzed().rdd()
     except Exception:
         return None
+
+
+def _backing_rdds(val) -> list:
+    dfs = list(val.values()) if isinstance(val, dict) else [val]
+    return [r for r in map(_checkpoint_rdd, dfs) if r is not None]
+
+
+def _checkpoint_file_exists(spark, rdd) -> bool:
+    f = rdd.getCheckpointFile()
+    if not f.isDefined():
+        return False
+    path = spark._jvm.org.apache.hadoop.fs.Path(f.get())
+    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return fs.exists(path)
+
+
+def _healthy(spark, val) -> bool:
+    rdds = _backing_rdds(val)
+    live = _persistent_rdd_ids(spark)
+    return bool(rdds) and all(
+        int(r.id()) in live or _checkpoint_file_exists(spark, r) for r in rdds
+    )
 
 
 class SessionCheckpointCache:
@@ -62,21 +88,13 @@ class SessionCheckpointCache:
         full = (spark.sparkContext.applicationId,) + tuple(key)
         hit = self.cache.get(full)
         if hit is not None:
-            ids = self.protected.get(full, set())
-            if ids and ids <= _persistent_rdd_ids(spark):
+            if _healthy(spark, hit):
                 return hit
             self.cache.pop(full, None)
             self.protected.pop(full, None)
         val = build()
-        dfs = list(val.values()) if isinstance(val, dict) else [val]
-        ids = {
-            i
-            for df in dfs
-            for i in (_checkpoint_rdd_id(df),)
-            if i is not None
-        }
         self.cache[full] = val
-        self.protected[full] = ids
+        self.protected[full] = {int(r.id()) for r in _backing_rdds(val)}
         return val
 
 

@@ -2212,14 +2212,14 @@ def mv_incremental_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract (count/sum/min/max merge losslessly) checked across
     engines, not just within Spark. Decimal value sums keep the merge
     order-insensitive."""
-    import shutil
     import tempfile
 
     from tansu_spark.streaming.mv import IncrementalView
 
     ev = load(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    scratch = tempfile.mkdtemp(prefix="mv_q_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="mv_q_", ignore_cleanup_errors=True
+    ) as scratch:
         view = IncrementalView(
             spark,
             f"{scratch}/v",
@@ -2258,8 +2258,6 @@ def mv_incremental_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 @query(

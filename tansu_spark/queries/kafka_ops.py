@@ -13,6 +13,8 @@ a topic becomes hash-checkable:
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -430,8 +432,6 @@ def kafka_avro_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 4-column typed projection."""
     import json as _json
     import os
-    import shutil
-    import tempfile
 
     import pandas as pd
 
@@ -476,8 +476,11 @@ def kafka_avro_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    scratch = tempfile.mkdtemp(prefix="kafka_avro_evo_")
-    try:
+    with tempfile.TemporaryDirectory(
+
+        prefix="kafka_avro_evo_", ignore_cleanup_errors=True
+
+    ) as scratch:
         sdir = os.path.join(scratch, "schemas")
         os.makedirs(sdir)
         avsc = os.path.join(sdir, "cust.avsc")
@@ -515,8 +518,6 @@ def kafka_avro_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("user_id").alias("users"),
         )
         rows = out.collect()
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
     return spark.createDataFrame(rows, out.schema)
 
 
@@ -575,14 +576,12 @@ def kafka_group_lag_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: produce is the one data-plane job; the report itself is
     control-plane file reads, exactly like the reference's describe
     path."""
-    import shutil
-    import tempfile
-
     from tansu_spark.broker.broker import Broker
 
     ev = load(spark, sf_dir, "events")
-    scratch = tempfile.mkdtemp(prefix="kafka_lag_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="kafka_lag_", ignore_cleanup_errors=True
+    ) as scratch:
         broker = Broker(spark, f"{scratch}/store")
         broker.create_topic("ev", partitions=4)
         # Deterministic per-partition offset order WITHOUT a global sort
@@ -627,8 +626,6 @@ def kafka_group_lag_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             for p, d in sorted(lag.items())
         ]
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "partition int, earliest bigint, high_watermark bigint, "
@@ -670,14 +667,12 @@ def kafka_txn_visibility_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: three produces + four control-plane-bounded fetch scans; the
     report itself is a groupBy count per snapshot."""
-    import shutil
-    import tempfile
-
     from tansu_spark.broker.broker import Broker
 
     ev = load(spark, sf_dir, "events")
-    scratch = tempfile.mkdtemp(prefix="kafka_txn_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="kafka_txn_", ignore_cleanup_errors=True
+    ) as scratch:
         broker = Broker(spark, f"{scratch}/store")
         broker.create_topic("tx", partitions=4)
 
@@ -733,8 +728,6 @@ def kafka_txn_visibility_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             for p in sorted(ru_open)
         ]
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "partition int, n_rc_open bigint, n_ru_open bigint, lso_open bigint, "

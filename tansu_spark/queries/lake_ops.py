@@ -5,6 +5,8 @@ expressed over the shared test tables."""
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -174,15 +176,13 @@ def lake_time_travel_first_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly, not just that some rows survived. SUM goes through DOUBLE
     (exact for these magnitudes) because DuckDB widens integer SUM to
     HUGEINT."""
-    import shutil
-    import tempfile
-
     from tansu_spark.lake.maintain import compact_table
     from tansu_spark.lake.snapshots import commit_snapshot, read_snapshot
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    scratch = tempfile.mkdtemp(prefix="lake_tt_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="lake_tt_", ignore_cleanup_errors=True
+    ) as scratch:
         d = f"{scratch}/t"
         docs.where(F.col("doc_id") % 3 == 0).write.mode("append").parquet(d)
         commit_snapshot(d, "append")
@@ -199,8 +199,6 @@ def lake_time_travel_first_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             # Materialize before the scratch dir vanishes.
             .transform(corpus_checkpoint)
         )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 @query(
@@ -238,9 +236,6 @@ def lake_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     (anti-join survivors + upserts); matching proves row-level update,
     delete AND insert semantics — not just appends — while the merge
     itself rewrote only the key-hash buckets the changeset touched."""
-    import shutil
-    import tempfile
-
     from tansu_spark.lake.merge import MergeTable
 
     base = load(spark, sf_dir, "orders").select(
@@ -248,8 +243,9 @@ def lake_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderstatus").alias("s"),
         F.col("o_totalprice").alias("p"),
     )
-    scratch = tempfile.mkdtemp(prefix="lake_mg_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="lake_mg_", ignore_cleanup_errors=True
+    ) as scratch:
         t = MergeTable(spark, f"{scratch}/t", ["k"], n_buckets=8)
         t.write_full(base)
         chg = (
@@ -280,8 +276,6 @@ def lake_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .transform(corpus_checkpoint)
         )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 @query(
@@ -308,9 +302,6 @@ def lake_merge_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     and delete (pre-image values) exactly, with no phantom rows from the
     untouched keys. Doubled prices stay IEEE-exact (x2 is a power of
     two), so no decimal detour is needed."""
-    import shutil
-    import tempfile
-
     from tansu_spark.lake.merge import MergeTable
 
     base = load(spark, sf_dir, "orders").select(
@@ -318,8 +309,9 @@ def lake_merge_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderstatus").alias("s"),
         F.col("o_totalprice").alias("p"),
     )
-    scratch = tempfile.mkdtemp(prefix="lake_cdf_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="lake_cdf_", ignore_cleanup_errors=True
+    ) as scratch:
         t = MergeTable(spark, f"{scratch}/t", ["k"], n_buckets=8, versioned=True)
         v0 = t.write_full(base)
         chg = (
@@ -340,8 +332,6 @@ def lake_merge_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         v1 = t.merge(chg)
         return t.changes_between(v0, v1).transform(corpus_checkpoint)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 from tansu_spark.functions.iceberg_hash import murmur3_cte_sql as _mm_cte
@@ -445,17 +435,15 @@ def lake_delete_vectors_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     the vector store, so matching the oracle proves the POSITIONAL
     plumbing end-to-end: the oracle only knows the predicates; the Spark
     side deletes by stored positions, not by re-evaluating them."""
-    import shutil
-    import tempfile
-
     from tansu_spark.lake.dv import DvTable
 
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_returnflag",
         "l_linestatus", "l_extendedprice",
     )
-    scratch = tempfile.mkdtemp(prefix="lake_dv_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="lake_dv_", ignore_cleanup_errors=True
+    ) as scratch:
         t = DvTable(spark, f"{scratch}/t")
         # Several files (per-file positions must be exercised) WITHOUT
         # shuffling the whole table for it: maxRecordsPerFile splits
@@ -487,8 +475,6 @@ def lake_delete_vectors_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         rows = out.collect()
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
     return spark.createDataFrame(rows, out.schema)
 
 
@@ -517,17 +503,15 @@ def lake_restore_version(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: restore is O(files changed) renames — no data copied — the
     same cost profile as Delta RESTORE writing only log entries."""
-    import shutil
-    import tempfile
-
     from tansu_spark.lake.maintain import compact_table
     from tansu_spark.lake.snapshots import commit_snapshot, restore_version
 
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    scratch = tempfile.mkdtemp(prefix="lake_restore_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="lake_restore_", ignore_cleanup_errors=True
+    ) as scratch:
         d = f"{scratch}/t"
         orders.where(F.col("o_orderkey") % 3 == 0).repartition(3).write.mode(
             "append"
@@ -548,8 +532,6 @@ def lake_restore_version(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         rows = out.collect()
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
     return spark.createDataFrame(rows, out.schema)
 
 
@@ -581,16 +563,14 @@ def streaming_lake_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: store() reads only offsets in (frontier, high-watermark) per
     partition — incremental cost follows the new data, and the replay
     run costs one empty scan."""
-    import shutil
-    import tempfile
-
     from tansu_spark.broker.broker import Broker
     from tansu_spark.lake.sink import LakeSink
     from tansu_spark.streaming.source import stream_to_lake
 
     ev = load(spark, sf_dir, "events")
-    scratch = tempfile.mkdtemp(prefix="lake_stream_sink_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="lake_stream_sink_", ignore_cleanup_errors=True
+    ) as scratch:
         broker = Broker(spark, f"{scratch}/store")
         broker.create_topic("ev", partitions=4)
         broker.produce(
@@ -626,8 +606,6 @@ def streaming_lake_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         rows = out.collect()
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
     return spark.createDataFrame(rows, out.schema)
 
 
@@ -666,16 +644,14 @@ def lake_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: audit cost is one predicate scan (production audits only the
     staged files via the version diff); rollback is O(files staged)."""
-    import shutil
-    import tempfile
-
     from tansu_spark.lake.snapshots import commit_snapshot, restore_version
 
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    scratch = tempfile.mkdtemp(prefix="lake_wap_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="lake_wap_", ignore_cleanup_errors=True
+    ) as scratch:
         d = f"{scratch}/t"
         base = orders.where(F.col("o_orderkey") % 2 == 0)
         base.write.mode("append").parquet(d)
@@ -723,8 +699,6 @@ def lake_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("n_publishes", F.lit(publishes).cast("long"))
         )
         rows = out.collect()
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
     return spark.createDataFrame(rows, out.schema)
 
 
@@ -759,9 +733,6 @@ def lake_snapshot_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
     no data copied, no Spark job; the safety property (live files never
     touched) is structural because the kept versions' file sets are
     excluded from the delete list before any unlink happens."""
-    import shutil
-    import tempfile
-
     from tansu_spark.lake.maintain import compact_table
     from tansu_spark.lake.snapshots import (
         commit_snapshot,
@@ -771,8 +742,9 @@ def lake_snapshot_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = load(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    scratch = tempfile.mkdtemp(prefix="lake_expire_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="lake_expire_", ignore_cleanup_errors=True
+    ) as scratch:
         d = f"{scratch}/t"
         ev.where(F.col("event_id") % 3 == 0).repartition(3).write.mode(
             "append"
@@ -809,8 +781,6 @@ def lake_snapshot_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         rows = out.collect()
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
     return spark.createDataFrame(rows, out.schema)
 
 
@@ -852,8 +822,6 @@ def lake_clone_shallow(spark: SparkSession, sf_dir: str) -> DataFrame:
     are ordinary local writes whose commits carry the external refs
     forward."""
     import glob as _glob
-    import shutil
-    import tempfile
 
     from tansu_spark.lake.snapshots import (
         clone_shallow,
@@ -864,8 +832,9 @@ def lake_clone_shallow(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    scratch = tempfile.mkdtemp(prefix="lake_clone_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="lake_clone_", ignore_cleanup_errors=True
+    ) as scratch:
         src = f"{scratch}/src"
         dst = f"{scratch}/clone"
         orders.repartition(3).write.mode("append").parquet(src)
@@ -908,8 +877,6 @@ def lake_clone_shallow(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(n_copied).cast("long").alias("n_files_copied"),
         )
         rows = out.collect()
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
     return spark.createDataFrame(rows, out.schema)
 
 
@@ -1042,9 +1009,6 @@ def lake_delta_log_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     stale bucket file surviving replay would double-count its rows).
     Scale: export is O(files) footer metadata reads, no data scan; the
     read is the same partition-pruned parquet scan as read_snapshot."""
-    import shutil
-    import tempfile
-
     from tansu_spark.lake.delta_log import export_delta_log, read_via_delta_log
     from tansu_spark.lake.merge import MergeTable
 
@@ -1053,8 +1017,9 @@ def lake_delta_log_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderstatus").alias("s"),
         F.col("o_totalprice").alias("p"),
     )
-    scratch = tempfile.mkdtemp(prefix="lake_dl_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="lake_dl_", ignore_cleanup_errors=True
+    ) as scratch:
         t = MergeTable(spark, f"{scratch}/t", ["k"], n_buckets=8, versioned=True)
         t.write_full(base)
         chg = (
@@ -1082,5 +1047,3 @@ def lake_delta_log_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .transform(corpus_checkpoint)
         )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)

@@ -131,42 +131,19 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # are localCheckpoint'ed eagerly (corpus-sized `sh` stays a plain .cache()
 # so dropping it only costs recompute, never correctness). Entries
 # self-heal: if an external unpersist dropped the checkpoint blocks, the
-# probe fails and the chain rebuilds. Protected RDD ids let bench.py's
+# probe fails and the chain rebuilds. Protected RDD ids let harness.release
 # between-query release keep the chain alive (the whole point of sharing).
 # ---------------------------------------------------------------------------
 
 # The cache-key / protected-id / self-heal mechanics live in
 # _session_cache.SessionCheckpointCache (ADVICE r10: three hand-rolled
 # copies of the probe-and-rebuild registry pattern had drifted here; the
-# contract now has one home). The module-level dict ALIASES below keep
-# the test hooks (tests/test_dedup.py clears/inspects them) stable.
-from tansu_spark.queries._session_cache import (  # noqa: E402
-    SessionCheckpointCache,
-    _checkpoint_rdd_id,
-    _persistent_rdd_ids,
-    all_protected_ids,
-)
+# contract now has one home, and it alone decides what a release keeps).
+from tansu_spark.queries._session_cache import SessionCheckpointCache  # noqa: E402
 
 _chain_cache = SessionCheckpointCache("dedup_chain")
-_CHAIN_CACHE = _chain_cache.cache
-_CHAIN_PROTECTED = _chain_cache.protected
-
 _fps_cache = SessionCheckpointCache("winnow_fps")
-_FPS_CACHE = _fps_cache.cache
-_FPS_PROTECTED = _fps_cache.protected
-
 _sh_cache = SessionCheckpointCache("shingles")
-_SH_CACHE = _sh_cache.cache
-_SH_PROTECTED = _sh_cache.protected
-
-
-def dedup_chain_protected_ids() -> set:
-    """RDD ids whose blocks back EVERY live session cache (the dedup
-    chain, the shingle table, the winnowing fingerprints, the shared
-    k-NN graph, ...) — callers that bulk-unpersist leftovers (bench.py)
-    must skip these. Delegates to the shared registry so a new cache
-    can never be dropped by an out-of-date list here."""
-    return all_protected_ids()
 
 
 def _sh_cached(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -41,7 +41,10 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load(spark, sf_dir, "embeddings")
 
 
-from tansu_spark.queries._session_cache import SessionCheckpointCache  # noqa: E402
+from tansu_spark.queries._session_cache import (  # noqa: E402
+    SessionCheckpointCache,
+    _checkpoint_rdd,
+)
 from tansu_spark.materialize import corpus_checkpoint  # noqa: E402
 
 _knn_cache = SessionCheckpointCache("knn_graph")
@@ -2632,14 +2635,6 @@ def embeddings_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     ]
 
-    def _ckpt_rdd(df):
-        # The persisted JVM RDD behind a localCheckpoint'ed DataFrame
-        # (same access path as pipeline._checkpoint_rdd_id).
-        try:
-            return df._jdf.queryExecution().analyzed().rdd()
-        except Exception:
-            return None
-
     prev = None
     for r in range(1, 8):
         md = md.transform(corpus_checkpoint)
@@ -2648,7 +2643,7 @@ def embeddings_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         # checkpointed as a single row below) — free them now.
         if prev is not None:
             prev.unpersist(False)
-        prev = _ckpt_rdd(md)
+        prev = _checkpoint_rdd(md)
         nxt = (
             md.orderBy(F.desc("dm"), F.asc("vec_id"))
             .limit(1)

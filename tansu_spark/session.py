@@ -10,6 +10,10 @@ Design notes for 100 TB / 1000-executor deployments (tested on local[N]):
 - Arrow execution enabled so any Pandas-UDF fallback path is vectorized.
 - Parquet pushdown/dictionary defaults left on; we verify pushdown in
   tests via ``explain("formatted")`` (PushedFilters / ReadSchema).
+- Streaming state stays on the HDFS-backed provider: RocksDB measured
+  24% slower on the stateful queries at sf0.1, where state is tiny. For
+  state larger than the heap, pass the RocksDB
+  ``spark.sql.streaming.stateStore.providerClass`` via ``extra_conf``.
 """
 
 from __future__ import annotations
@@ -34,9 +38,12 @@ _DEFAULTS = {
     # matching) — the reference's json/arrow.rs:70-78 behavior.
     "spark.sql.parquet.fieldId.write.enabled": "true",
     "spark.sql.shuffle.partitions": "32",
+    # Reliable checkpoints (materialize.corpus_checkpoint under
+    # SPARK_GRAFT_CHECKPOINT_DIR) are deleted once their RDD is
+    # unreachable, so a long-lived session's checkpoint dir stays bounded.
+    "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }
-
 
 
 def get_spark(
@@ -62,20 +69,6 @@ def get_spark(
         )
     builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
     conf = dict(_DEFAULTS)
-    # Streaming state store (r10 verdict ask #8, measured r11): the
-    # HDFS-backed provider stays the LOCAL default — on the 8 stateful
-    # streaming entries at sf0.1 RocksDB measured 24% slower end-to-end
-    # (21.8s vs 17.6s; per-query store open/close dominates when state
-    # is tiny). At production scale the tradeoff inverts: state larger
-    # than the executor heap (billions of keys) needs RocksDB's off-heap
-    # store — flip it with SPARK_GRAFT_STATESTORE=rocksdb; operators
-    # that REQUIRE RocksDB (transformWithState in streaming/source.py)
-    # pin it per-query regardless of this default.
-    if os.environ.get("SPARK_GRAFT_STATESTORE", "").lower() == "rocksdb":
-        conf["spark.sql.streaming.stateStore.providerClass"] = (
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider"
-        )
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

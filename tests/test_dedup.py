@@ -255,38 +255,44 @@ def test_dedup_chain_self_heals_after_unpersist(spark):
     assert ch2["cc"].count() > 0
 
 
-def test_dedup_chain_protected_ids_exact_and_reset_on_rebuild(spark):
+def test_dedup_chain_protected_rdd_ids_exact_and_reset_on_rebuild(spark):
     """ADVICE r3: protected ids come from the chain's OWN checkpointed
     plans (one per table), are all live in the persistent-RDD registry,
     exclude unrelated concurrent persists, and are replaced — not
     accumulated — when the chain rebuilds."""
     from tansu_spark.queries import pipeline as P
+    from tansu_spark.queries._session_cache import (
+        SessionCheckpointCache,
+        _checkpoint_rdd,
+        _persistent_rdd_ids,
+        all_protected_ids,
+    )
 
     sf = "/root/testdata/sf0.001"
     # an unrelated persist concurrent with the chain build must never be
     # claimed by the protected set (the old before/after diff would)
     stranger = spark.range(100).localCheckpoint(eager=True)
-    stranger_id = P._checkpoint_rdd_id(stranger)
-    assert stranger_id is not None
+    stranger_rdd = _checkpoint_rdd(stranger)
+    assert stranger_rdd is not None
+    stranger_id = int(stranger_rdd.id())
 
-    # dedup_chain_protected_ids() unions EVERY registered session cache
+    # all_protected_ids() unions EVERY registered session cache
     # (winnowing fingerprints since r8, the shared k-NN graph since r11)
     # — clear them all, or any earlier test that populated one makes the
     # exact-count assert below order-dependent.
-    from tansu_spark.queries._session_cache import SessionCheckpointCache
 
     for inst in SessionCheckpointCache._instances:
         inst.cache.clear()
         inst.protected.clear()
     P._dedup_chain(spark, sf)
-    ids1 = P.dedup_chain_protected_ids()
+    ids1 = all_protected_ids()
     assert len(ids1) == 4, ids1  # sh, pairs, verified, cc — one id each
     assert stranger_id not in ids1
-    assert ids1 <= P._persistent_rdd_ids(spark)
+    assert ids1 <= _persistent_rdd_ids(spark)
 
     # cached re-entry: same ids, no growth (probe is driver-side only)
     P._dedup_chain(spark, sf)
-    assert P.dedup_chain_protected_ids() == ids1
+    assert all_protected_ids() == ids1
 
     # external unpersist of one backing RDD → rebuild replaces ALL ids
     it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
@@ -296,10 +302,10 @@ def test_dedup_chain_protected_ids_exact_and_reset_on_rebuild(spark):
             e._2().unpersist(False)
             break
     P._dedup_chain(spark, sf)
-    ids2 = P.dedup_chain_protected_ids()
+    ids2 = all_protected_ids()
     assert len(ids2) == 4, ids2
     assert not (ids1 & ids2) or ids1 != ids2  # stale set did not accumulate
-    assert ids2 <= P._persistent_rdd_ids(spark)
+    assert ids2 <= _persistent_rdd_ids(spark)
     stranger.unpersist()
 
 
@@ -398,16 +404,20 @@ def test_winnow_fps_cache_self_heals_and_protects(spark):
     external bulk-unpersist triggers rebuild (not failure), and the
     protected id is replaced on rebuild."""
     from tansu_spark.queries import pipeline as P
+    from tansu_spark.queries._session_cache import (
+        _persistent_rdd_ids,
+        all_protected_ids,
+    )
 
     sf = "/root/testdata/sf0.001"
-    P._FPS_CACHE.clear()
-    P._FPS_PROTECTED.clear()
+    P._fps_cache.cache.clear()
+    P._fps_cache.protected.clear()
     fps = P._winnow_fps_cached(spark, sf)
     n = fps.count()
     assert n > 0
-    ids1 = set().union(*P._FPS_PROTECTED.values())
-    assert len(ids1) == 1 and ids1 <= P._persistent_rdd_ids(spark)
-    assert ids1 <= P.dedup_chain_protected_ids()
+    ids1 = set().union(*P._fps_cache.protected.values())
+    assert len(ids1) == 1 and ids1 <= _persistent_rdd_ids(spark)
+    assert ids1 <= all_protected_ids()
     # cache hit: same object, no rebuild
     assert P._winnow_fps_cached(spark, sf) is fps
 
@@ -419,5 +429,5 @@ def test_winnow_fps_cache_self_heals_and_protects(spark):
     fps2 = P._winnow_fps_cached(spark, sf)  # must rebuild, not raise
     assert fps2 is not fps
     assert fps2.count() == n
-    ids2 = set().union(*P._FPS_PROTECTED.values())
+    ids2 = set().union(*P._fps_cache.protected.values())
     assert len(ids2) == 1 and ids2 != ids1

@@ -7,13 +7,11 @@ and the single-node case has no executor-loss hazard)."""
 
 from __future__ import annotations
 
-import os
 import re
+import shutil
 from pathlib import Path
 
-import pytest
-
-from tansu_spark.materialize import corpus_checkpoint, materialize
+from tansu_spark.materialize import corpus_checkpoint
 
 PKG = Path(__file__).resolve().parent.parent / "tansu_spark"
 
@@ -68,11 +66,40 @@ def test_corpus_checkpoint_local_default_and_reliable_switch(
     assert {(r.id, r.v) for r in reliable.collect()} == expect
     assert any(ckpt.rglob("*")), "reliable checkpoint wrote no files"
 
-    # Model scale ignores the env var (stays local).
-    n_before = sum(1 for _ in ckpt.rglob("*") if _.is_file())
-    materialize(df, scale="model").collect()
-    n_after = sum(1 for _ in ckpt.rglob("*") if _.is_file())
-    assert n_after == n_before
 
-    with pytest.raises(ValueError):
-        materialize(df, scale="galaxy")
+def test_session_cache_hits_reliable_checkpoint_until_its_file_is_gone(
+    spark, tmp_path, monkeypatch
+):
+    """ADVICE (materialize.py:50): reliable checkpoints never enter the
+    persistent-RDD registry, so a registry-only probe missed on every
+    get and re-ran corpus-sized builds per consumer. The probe must count
+    an existing checkpoint file as healthy, and rebuild once it is gone;
+    the session must clean unreachable checkpoint files."""
+    from urllib.parse import urlparse
+
+    from tansu_spark.queries._session_cache import SessionCheckpointCache
+
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true"
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ckpt"))
+    builds = []
+
+    def build():
+        builds.append(1)
+        return spark.range(0, 100).transform(corpus_checkpoint)
+
+    cache = SessionCheckpointCache("test_reliable_checkpoint")
+    try:
+        first = cache.get(spark, ("k",), build)
+        for _ in range(2):
+            assert cache.get(spark, ("k",), build) is first
+        assert len(builds) == 1
+
+        ckpt_file = first._jdf.queryExecution().analyzed().rdd().getCheckpointFile()
+        assert ckpt_file.isDefined(), "corpus_checkpoint was not reliable"
+        shutil.rmtree(urlparse(ckpt_file.get()).path)
+        second = cache.get(spark, ("k",), build)
+        assert len(builds) == 2 and second is not first
+        assert second.count() == 100
+    finally:
+        SessionCheckpointCache._instances.remove(cache)

@@ -381,11 +381,11 @@ def test_knn_graph_session_cache_equals_fresh_build_and_self_heals(spark, sf_dir
     rows_fresh = {tuple(r) for r in fresh.collect()}
     assert rows_cached == rows_fresh and rows_cached
 
-    # protected ids are what bench.py's release keeps alive
-    from tansu_spark.queries.pipeline import dedup_chain_protected_ids
+    # protected ids are what harness.release keeps alive
+    from tansu_spark.queries._session_cache import all_protected_ids
 
     ids = set().union(*_knn_cache.protected.values())
-    assert ids and ids <= dedup_chain_protected_ids()
+    assert ids and ids <= all_protected_ids()
 
     # external unpersist of everything -> probe fails -> rebuild
     it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()

@@ -7,8 +7,8 @@ Usage:
       also writes DIR/<q>_<SUFFIX>.txt explain("formatted") snapshots
 
 Timing methodology is bench.py's exactly: wall time of plan + execute +
-collect at $SPARK_GRAFT_SF_DIR (default sf0.1), cache released between
-queries with the same protected-id discipline, job counts via job-group
+collect at $SPARK_GRAFT_SF_DIR (default sf0.1), released and timed by
+the same tansu_spark/harness.py calls, job counts via job-group
 tagging. Three repeats, min reported (we optimize plan shape, not host
 noise).
 """
@@ -18,7 +18,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -33,25 +32,13 @@ def main() -> None:
         args = args[3:]
     repeats = int(os.environ.get("OPT_PROFILE_REPEATS", "3"))
 
+    from tansu_spark.harness import release, timed
     from tansu_spark.queries import QUERIES
     from tansu_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="opt-profile")
     spark.sparkContext.setLogLevel("ERROR")
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    from tansu_spark.queries.pipeline import dedup_chain_protected_ids
-
-    def release_cached() -> None:
-        keep = dedup_chain_protected_ids()
-        spark.catalog.clearCache()
-        it = sc._jsc.sc().getPersistentRDDs().iterator()
-        while it.hasNext():
-            e = it.next()
-            if int(e._1()) not in keep:
-                e._2().unpersist(False)
 
     # Warm up JVM + parquet footers like bench.py does.
     QUERIES["tpch_q6_forecast_revenue"](spark, sf_dir).collect()
@@ -70,15 +57,11 @@ def main() -> None:
             with open(os.path.join(plans_dir, f"{name}_{suffix}.txt"), "w") as fh:
                 fh.write(plan)
         best, jobs = float("inf"), None
-        for r in range(repeats):
-            release_cached()
-            gid = f"p:{name}:{r}"
-            sc.setJobGroup(gid, name)
-            t0 = time.perf_counter()
-            QUERIES[name](spark, sf_dir).collect()
-            sec = time.perf_counter() - t0
-            sc._jsc.clearJobGroup()
-            nj = len(tracker.getJobIdsForGroup(gid))
+        for _ in range(repeats):
+            release(spark)
+            sec, nj = timed(
+                spark, name, lambda: QUERIES[name](spark, sf_dir).collect()
+            )
             if sec < best:
                 best, jobs = sec, nj
         out[name] = {"sec": round(best, 3), "jobs": jobs}

@@ -24,7 +24,6 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -156,6 +155,7 @@ def _resolve(name: str):
 
 
 def main() -> None:
+    from tansu_spark.harness import release, timed
     from tansu_spark.session import get_spark
 
     do_sf1 = "--sf1" in sys.argv and os.path.isdir(SF1_DIR)
@@ -163,45 +163,25 @@ def main() -> None:
     spark = get_spark(app_name="tansu-scale-sweep")
     spark.sparkContext.setLogLevel("ERROR")
 
-    def release() -> None:
-        # Same contract as bench.py: drop per-query leftovers but keep
-        # the shared dedup chain's checkpoints alive (its self-heal
-        # would otherwise rebuild inside every timed chain query).
-        from tansu_spark.queries.pipeline import dedup_chain_protected_ids
-
-        keep = dedup_chain_protected_ids()
-        spark.catalog.clearCache()
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-        while it.hasNext():
-            e = it.next()
-            if int(e._1()) not in keep:
-                e._2().unpersist(False)
-
     # Warm the JVM so sf0.001 isn't charged the first-ever codegen.
     _resolve(NAMES[0])(spark, "/root/testdata/sf0.001").collect()
 
+    def wall(name: str, sf_dir: str) -> float:
+        release(spark)
+        return timed(spark, name, lambda: _resolve(name)(spark, sf_dir).collect())[0]
+
     table: dict[str, dict[str, float]] = {}
     for sf in SFS:
-        d = f"/root/testdata/sf{sf}"
         for name in NAMES:
-            release()
-            t0 = time.perf_counter()
-            _resolve(name)(spark, d).collect()
-            table.setdefault(name, {})[sf] = time.perf_counter() - t0
+            table.setdefault(name, {})[sf] = wall(name, f"/root/testdata/sf{sf}")
 
     heavy_extra = [n for n in HEAVY if n not in NAMES]
     if do_sf1:
         # The sf1 decade needs 0.1 times for names not in the 3-SF sweep.
         for name in heavy_extra:
-            release()
-            t0 = time.perf_counter()
-            _resolve(name)(spark, "/root/testdata/sf0.1").collect()
-            table.setdefault(name, {})["0.1"] = time.perf_counter() - t0
+            table.setdefault(name, {})["0.1"] = wall(name, "/root/testdata/sf0.1")
         for name in HEAVY:
-            release()
-            t0 = time.perf_counter()
-            _resolve(name)(spark, SF1_DIR).collect()
-            table.setdefault(name, {})["1"] = time.perf_counter() - t0
+            table.setdefault(name, {})["1"] = wall(name, SF1_DIR)
 
     lines = [
         "# SCALING — wall time vs data size (local[32])",

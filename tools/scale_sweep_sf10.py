@@ -29,7 +29,6 @@ import json
 import os
 import sys
 import threading
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -72,6 +71,7 @@ def main() -> None:
         BAND[:] = [b for b in BAND if b[0] in keep]
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
 
+    from tansu_spark.harness import release, timed
     from tansu_spark.queries import QUERIES
     from tansu_spark.session import get_spark
 
@@ -79,42 +79,28 @@ def main() -> None:
     sc = spark.sparkContext
     sc.setLogLevel("ERROR")
 
-    def release() -> None:
-        from tansu_spark.queries.pipeline import dedup_chain_protected_ids
-
-        keep = dedup_chain_protected_ids()
-        spark.catalog.clearCache()
-        it = sc._jsc.sc().getPersistentRDDs().iterator()
-        while it.hasNext():
-            e = it.next()
-            if int(e._1()) not in keep:
-                e._2().unpersist(False)
-
-    def timed(name: str, sf_dir: str) -> float:
-        release()
+    def wall(name: str, sf_dir: str) -> float:
+        release(spark)
         cancel = threading.Timer(WATCHDOG_S, sc.cancelAllJobs)
         cancel.start()
-        t0 = time.perf_counter()
         try:
-            QUERIES[name](spark, sf_dir).collect()
-            return time.perf_counter() - t0
+            return timed(
+                spark, name, lambda: QUERIES[name](spark, sf_dir).collect()
+            )[0]
         finally:
             cancel.cancel()
 
     # Calibration (bench.py conventions): scan control at sf0.1 + loadavg.
     load_start = os.getloadavg()[0]
     QUERIES["tpch_q6_forecast_revenue"](spark, "/root/testdata/sf0.1").collect()
-    release()
-    t0 = time.perf_counter()
-    QUERIES["tpch_q6_forecast_revenue"](spark, "/root/testdata/sf0.1").collect()
-    scan_control = time.perf_counter() - t0
+    scan_control = wall("tpch_q6_forecast_revenue", "/root/testdata/sf0.1")
 
     rows: list[dict] = []
     for name, why in BAND:
-        s1 = timed(name, SF1_DIR)
+        s1 = wall(name, SF1_DIR)
         print(f"{name}: sf1 {s1:.2f}s", flush=True)
         try:
-            s10 = timed(name, SF10_DIR)
+            s10 = wall(name, SF10_DIR)
             status = "ok" if s10 < WATCHDOG_S else "over"
         except Exception as exc:  # watchdog cancel surfaces here
             s10, status = float("nan"), f"TIMEOUT>{WATCHDOG_S:.0f}s ({exc})"

@@ -23,7 +23,6 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -448,19 +447,8 @@ FAMILIES = [
 ]
 
 
-def _release(spark):
-    from tansu_spark.queries.pipeline import dedup_chain_protected_ids
-
-    keep = dedup_chain_protected_ids()
-    spark.catalog.clearCache()
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-    while it.hasNext():
-        e = it.next()
-        if int(e._1()) not in keep:
-            e._2().unpersist(False)
-
-
 def main() -> None:
+    from tansu_spark.harness import release, timed
     from tansu_spark.session import get_spark
 
     spark = get_spark(app_name="tansu-stage-attribution")
@@ -477,11 +465,13 @@ def main() -> None:
     walls: dict[str, dict[str, float]] = {}
     for d, lab in zip(dirs, labels):
         for qname, fn in FAMILIES:
-            _release(spark)
-            t0 = time.perf_counter()
-            for stage, val in fn(spark, d):
+            release(spark)
+            stages: list = []
+            walls.setdefault(qname, {})[lab], _ = timed(
+                spark, qname, lambda: stages.extend(fn(spark, d))
+            )
+            for stage, val in stages:
                 results.setdefault(qname, {}).setdefault(stage, {})[lab] = val
-            walls.setdefault(qname, {})[lab] = time.perf_counter() - t0
             print(f"{lab} {qname} done {walls[qname][lab]:.1f}s", flush=True)
 
     lines = [
