@@ -340,29 +340,6 @@ def simhash64_pairs(
     )
 
 
-def simhash_pairs(
-    fps: DataFrame, id_col: str = "doc_id", max_hamming: int = 3
-) -> DataFrame:
-    """Near-dup pairs by SimHash hamming distance. Blocked on the high byte
-    (docs must agree on bits 8-15) so the self-join is an equi-join, then
-    exact hamming over the remaining bits filters."""
-    a = fps.select(F.col(id_col).alias("doc_a"), F.col("simhash").alias("sh_a"))
-    b = fps.select(F.col(id_col).alias("doc_b"), F.col("simhash").alias("sh_b"))
-    block_a = F.shiftright("sh_a", 8)
-    block_b = F.shiftright("sh_b", 8)
-    hamming = sum(
-        (F.shiftright("sh_a", p).bitwiseAND(F.lit(1)) != F.shiftright("sh_b", p).bitwiseAND(F.lit(1))).cast("int")
-        for p in range(16)
-    )
-    return (
-        a.join(b, block_a == block_b)
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
-    )
-
-
 def containment_verify(
     pairs: DataFrame,
     shingled: DataFrame,

@@ -20,20 +20,28 @@ Scale design:
   slower at 8x16 codes than the join form).
 - Encoding: the same broadcast-join assignment, packed to a code array
   per vector plus its stored norm.
-- Serving (asymmetric distance): per query, an n_sub x n_codes table of
-  subvector dot products is computed ONCE driver-side (tiny model-state
-  arithmetic, like broadcasting the codebooks); corpus-side the score is
-  n_sub literal-array lookups + adds per row — the whole scan stays in
-  whole-stage codegen, reading 8 bytes of codes instead of 256 bytes of
-  floats. approx_cosine = LUT-sum / (|q| * stored |x|).
+- Serving (asymmetric distance): per query, an n_sub x n_codes lookup
+  table (LUT) of subvector dot products is a DATAFLOW (`lut_table_df`:
+  queries joined to the broadcast codebook table — no driver collect);
+  corpus-side each candidate's codes join the broadcast LUT and the
+  per-sub dots fold in sub order (`_adc_scores`), reading 8 bytes of
+  codes instead of 256 bytes of floats. approx_cosine = LUT-sum /
+  (|q| * stored |x|). With an IVF coarse quantizer in front
+  (`ivf_pq_topk_df`), only the probed clusters' codes are scored.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from tansu_spark.functions.similarity import _py_norm, dot, norm
+from tansu_spark.functions.similarity import (
+    _top_k,
+    centroid_model_row,
+    dot,
+    nearest_centroids,
+    norm,
+)
 from tansu_spark.materialize import corpus_checkpoint
 
 
@@ -103,7 +111,6 @@ def train_codebooks(
     corpus: DataFrame,
     n_sub: int = 8,
     n_codes: int = 16,
-    n_dims: int = 64,
     n_iter: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -112,10 +119,7 @@ def train_codebooks(
     """One L2 Lloyd run per subspace over the (optionally hash-sampled)
     corpus. Codebook ids are the seed ids; empty codes keep their
     previous centroid — same reproducibility contract as
-    similarity.kmeans_centroids."""
-    if n_dims % n_sub:
-        raise ValueError(f"n_dims {n_dims} not divisible by n_sub {n_sub}")
-    d = n_dims // n_sub
+    similarity.kmeans_centroids. The vector width comes from the seeds."""
     if train_frac is not None and train_frac < 1.0:
         from tansu_spark.functions.sampling import hash_sample
 
@@ -129,6 +133,10 @@ def train_codebooks(
         .limit(n_codes)
         .collect()
     )
+    width = len(seed_rows[0][1])
+    if width % n_sub:
+        raise ValueError(f"vector width {width} not divisible by n_sub {n_sub}")
+    d = width // n_sub
     books: list[Codebook] = [
         [(cid, v[s * d : (s + 1) * d]) for cid, v in seed_rows] for s in range(n_sub)
     ]
@@ -259,12 +267,13 @@ def lut_table_df(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """The ADC lookup tables as a DATAFLOW (query_id, sub, code, dot, qn)
-    — `_lut_df` without the driver round-trip: queries join the
-    broadcast codebook table and each (query, sub, code) row computes
-    dot(query subvector, codeword) with the same f64 left fold the
-    driver-side Python sum performed (identical IEEE doubles). Row count
-    is |Q| x n_sub x n_codes — broadcast-sized by the same contract."""
+    """The ADC lookup tables as a DATAFLOW (query_id, sub, code, dot, qn):
+    queries join the broadcast codebook table and each (query, sub,
+    code) row computes dot(query subvector, codeword) with the f64 left
+    fold the DuckDB oracle replays; qn is the query's norm. No driver
+    collect, and the plan is constant-size in the number of queries.
+    Row count is |Q| x n_sub x n_codes — broadcast-sized by the same
+    contract as the query set."""
     return (
         queries.select(
             F.col(id_col).alias("query_id"),
@@ -308,59 +317,42 @@ def pq_encode(
     return packed.join(norms, id_col)
 
 
-def _lut_df(spark, books: list[Codebook], q_rows, id_type: str = "bigint") -> DataFrame:
-    """The serving lookup tables as a broadcast TABLE
-    (query_id, sub, code, dot, qn) instead of per-query literal arrays:
-    plan size stays CONSTANT in the number of queries (the literal form
-    grew O(Q x n_sub x n_codes) expression nodes — the exact plan-growth
-    trade _books_df already made for training). dot is computed
-    driver-side on the tiny model state with the same left-to-right
-    Python fold as before, so scores stay bit-identical. ``id_type`` is
-    the simpleString of the caller's query-id column so non-integer ids
-    (string keys) survive the createDataFrame round-trip."""
-    d = len(books[0][0][1])
-    rows = []
-    for qr in q_rows:
-        qv = [float(x) for x in qr[1]]
-        qn = _py_norm(qv)
-        for s, book in enumerate(books):
-            qs = qv[s * d : (s + 1) * d]
-            for cid, v in book:
-                rows.append(
-                    (qr[0], s, cid, sum(a * b for a, b in zip(qs, v)), qn)
-                )
-    return spark.createDataFrame(
-        rows, f"query_id {id_type}, sub int, code int, dot double, qn double"
+def _adc_scores(
+    cand: DataFrame, lut: DataFrame, id_col: str, init: Column
+) -> DataFrame:
+    """(query_id, id, approx_cosine) for candidate (query_id, id, codes,
+    vnorm) rows via the broadcast-LUT join: explode the stored codes
+    (map-only), equi-join the LUT on (query_id, sub, code), and fold the
+    per-sub dots ORDERED BY sub starting from `init` — init + d0 + ... +
+    d7, the IEEE addition sequence the DuckDB oracle replays with
+    list_prepend(init, list(sc ORDER BY sub)), so values are
+    bit-identical. `init` is 0.0 for plain PQ and the per-probe
+    dot(q, centroid) for residual IVFADC. The denominator is the LUT's
+    query norm times the stored corpus norm, each floored at 1e-30."""
+    exploded = cand.select(
+        "query_id",
+        id_col,
+        "vnorm",
+        init.alias("_init"),
+        F.posexplode("codes").alias("sub", "code"),
     )
-
-
-def _adc_scores(encoded: DataFrame, lut: DataFrame, id_col: str) -> DataFrame:
-    """(query_id, id, approx_cosine) via the broadcast-LUT join: explode
-    the stored codes (map-only), equi-join the LUT on (sub, code), and
-    fold the per-sub dots ORDERED BY sub — 0.0 + d0 + ... + d7, the same
-    IEEE addition sequence the literal form produced (and the one the
-    DuckDB oracle replays), so values are bit-identical."""
-    exploded = encoded.select(
-        id_col, "vnorm", F.posexplode("codes").alias("sub", "code")
-    )
-    joined = exploded.join(F.broadcast(lut), ["sub", "code"])
+    joined = exploded.join(F.broadcast(lut), ["query_id", "sub", "code"])
     num = joined.groupBy("query_id", id_col).agg(
-        F.aggregate(
-            F.array_sort(F.collect_list(F.struct("sub", "dot"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x.getField("dot"),
-        ).alias("num"),
+        F.array_sort(F.collect_list(F.struct("sub", "dot"))).alias("_l"),
+        F.first("_init").alias("_init"),
         F.first("qn").alias("qn"),
         F.first("vnorm").alias("vnorm"),
     )
     return num.select(
         "query_id",
         id_col,
-        (F.col("num")
-             / (F.greatest(F.col("qn"), F.lit(1e-30))
-                * F.greatest(F.col("vnorm"), F.lit(1e-30)))).alias(
-                "approx_cosine"
-            ),
+        (
+            F.aggregate("_l", F.col("_init"), lambda acc, x: acc + x.getField("dot"))
+            / (
+                F.greatest(F.col("qn"), F.lit(1e-30))
+                * F.greatest(F.col("vnorm"), F.lit(1e-30))
+            )
+        ).alias("approx_cosine"),
     )
 
 
@@ -374,29 +366,24 @@ def pq_topk(
 ) -> DataFrame:
     """Approximate cosine top-k per query over the ENCODED corpus
     (asymmetric distance: original query vector vs quantized corpus).
-    Queries collect to the driver (few rows, like the IVF probe set) and
-    become ONE broadcast LUT table keyed by (query_id, sub, code) — the
-    corpus scan reads 8-byte codes, joins the broadcast, and partial-aggs
-    the per-sub dots map-side, so the shuffle carries ~|Q|x|N| slim rows
-    and the plan is constant-size however many queries are served.
-    Output: (query_id, vec_id, approx_cosine)."""
-    lut = _lut_df(
-        encoded.sparkSession,
-        books,
-        queries.select(id_col, vec_col).collect(),
-        queries.schema[id_col].dataType.simpleString(),
+    The queries' LUT is ONE broadcast table keyed by (query_id, sub,
+    code), built by a join with no driver collect; every (query, corpus
+    vector) pair is a candidate — the broadcast query ids cross the
+    encoded corpus, whose scan reads 8-byte codes — so the shuffle
+    carries ~|Q|x|N| slim rows and the plan is constant-size however
+    many queries are served. Output: (query_id, vec_id, approx_cosine)."""
+    lut = lut_table_df(
+        queries,
+        _books_df(encoded.sparkSession, books),
+        len(books[0][0][1]),
+        id_col,
+        vec_col,
     )
-    scored = _adc_scores(encoded, lut, id_col).filter(
-        F.col(id_col) != F.col("query_id")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_cosine"), F.asc(id_col)
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    cand = encoded.crossJoin(
+        F.broadcast(queries.select(F.col(id_col).alias("query_id")))
+    ).filter(F.col(id_col) != F.col("query_id"))
+    scored = _adc_scores(cand, lut, id_col, F.lit(0.0))
+    return _top_k(scored, k, "query_id", "approx_cosine", id_col).drop("rank")
 
 
 def ivf_pq_topk_df(
@@ -411,114 +398,6 @@ def ivf_pq_topk_df(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """The full IVF-PQ serving path with EVERY model artifact a
-    dataflow — the zero-collect / zero-checkpoint twin of `ivf_pq_topk`
-    (r6 verdict "What's wrong #1": the old shape ran 4 serial driver
-    jobs — seed collect, codebook collect, index checkpoint, query
-    collect — before the action; in a contended environment those
-    dominated wall time 10x over compute).
-
-    One Spark action. The corpus pass is map-only: cluster (nearest
-    coarse centroid via the broadcast centroid model row), codes
-    (per-subspace argmax via the broadcast codebook model row), and the
-    stored norm are all computed in one projection — at a billion
-    vectors this is the index-build scan, and serving reads the probed
-    clusters' 8-byte codes through the broadcast LUT join exactly as
-    before. Scores are bit-identical to `ivf_pq_topk` (same f64 left
-    folds; pinned by the unchanged DuckDB oracle)."""
-    from tansu_spark.functions.similarity import (
-        centroid_model_row,
-        model_row_scores,
-    )
-
-    cents_model = centroid_model_row(cent_df)
-    books_row = books_model_row(books_df)
-
-    enc = (
-        corpus.select(id_col, vec_col)
-        .crossJoin(F.broadcast(cents_model))
-        .crossJoin(F.broadcast(books_row))
-        .withColumn("_vn", norm(vec_col))
-        .select(
-            F.col(id_col),
-            (
-                -F.array_max(model_row_scores(vec_col, F.col("_vn"))).getField(
-                    "nid"
-                )
-            ).alias("cluster"),
-            model_row_codes(vec_col, n_sub, d).alias("codes"),
-            F.col("_vn").alias("vnorm"),
-        )
-    )
-
-    probes = (
-        queries.select(id_col, vec_col)
-        .crossJoin(F.broadcast(cents_model))
-        .withColumn("_vn", norm(vec_col))
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.explode(
-                F.slice(
-                    F.sort_array(
-                        model_row_scores(vec_col, F.col("_vn")), asc=False
-                    ),
-                    1,
-                    n_probe,
-                )
-            ).alias("_p"),
-        )
-        .select("query_id", (-F.col("_p.nid")).alias("cluster"))
-    )
-
-    cand = enc.join(F.broadcast(probes), "cluster").filter(
-        F.col(id_col) != F.col("query_id")
-    )
-    lut = lut_table_df(queries, books_df, d, id_col, vec_col)
-    exploded = cand.select(
-        "query_id", id_col, "vnorm", F.posexplode("codes").alias("sub", "code")
-    )
-    joined = exploded.join(F.broadcast(lut), ["query_id", "sub", "code"])
-    scored = (
-        joined.groupBy("query_id", id_col)
-        .agg(
-            F.aggregate(
-                F.array_sort(F.collect_list(F.struct("sub", "dot"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x.getField("dot"),
-            ).alias("num"),
-            F.first("qn").alias("qn"),
-            F.first("vnorm").alias("vnorm"),
-        )
-        .select(
-            "query_id",
-            id_col,
-            (F.col("num")
-             / (F.greatest(F.col("qn"), F.lit(1e-30))
-                * F.greatest(F.col("vnorm"), F.lit(1e-30)))).alias(
-                "approx_cosine"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_cosine"), F.asc(id_col)
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
-
-
-def ivf_pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    cents: Codebook,
-    books: list[Codebook],
-    k: int = 5,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
     """The full IVF-PQ serving path: the coarse quantizer prunes the
     corpus to each query's n_probe nearest clusters, PQ codes score the
     survivors via lookup tables. At a billion vectors this is the whole
@@ -526,107 +405,38 @@ def ivf_pq_topk(
     32-fold — the scan that remains reads 8-byte codes from 1/8th of
     the corpus.
 
-    Probe selection is itself a DataFrame computation (the same
-    literal-centroid argmax `ivf_assign` uses, top-n_probe via a
-    reverse-sorted slice), so serving scales to arbitrarily many queries
-    — no driver-side per-query Python loop; candidates are pruned to the
-    probed clusters BEFORE any scoring by a broadcast (query, cluster)
-    probe join, then scored through the broadcast LUT table — both model
-    artifacts travel as data, so the plan is constant-size in the number
-    of queries. The one remaining collect feeds the LUT build (tiny model
-    arithmetic, O(Q x n_sub x n_codes) rows)."""
-    from tansu_spark.functions.similarity import ivf_assign
-
-    # The (codes, norm, cluster) index is built once and served many
-    # times in production; materialize it so scoring scans the 8-byte
-    # codes, not the assignment lineage.
-    enc = (
-        pq_encode(corpus, books)
-        .join(
-            ivf_assign(corpus, cents, id_col, vec_col).select(id_col, "cluster"),
-            id_col,
-        )
-        .transform(corpus_checkpoint)
-    )
-
-    spark = corpus.sparkSession
-
-    # Probe selection as a scan over the query DataFrame joined to the
-    # centroids as a broadcast TABLE (cent_id, cvec, cnorm) — the same
-    # constant-plan-size trade _books_df makes for the codebooks: the
-    # literal-centroid form costs O(n_clusters x n_dims) expression
-    # nodes in codegen per fresh plan. Scores use the same f64
-    # left-fold cosine the literal form produced (identical IEEE
-    # sequence -> identical probes); ties -> lowest centroid id. The
-    # join key is a constant so the tiny centroid table broadcasts as a
-    # hash join, and top-n_probe is a per-query window over Q x
-    # n_clusters slim rows.
-    cents_df = spark.createDataFrame(
-        [(cid, [float(x) for x in v], _py_norm(v)) for cid, v in cents],
-        "cent_id int, cvec array<double>, cnorm double",
-    )
-    q_scored = (
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
-        )
-        .withColumn("_vn", norm("_qv"))
-        .withColumn("_one", F.lit(1))
-        .join(F.broadcast(cents_df.withColumn("_one", F.lit(1))), "_one")
-        .select(
-            "query_id",
-            "cent_id",
-            (dot("_qv", "cvec") / (F.col("_vn") * F.col("cnorm"))).alias("_c"),
-        )
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.desc("_c"), F.asc("cent_id")
+    Every model artifact is a dataflow and the query is ONE Spark action
+    (r6 verdict "What's wrong #1": a driver-collect shape ran 4 serial
+    jobs — seed collect, codebook collect, index checkpoint, query
+    collect — that dominated wall time 10x over compute in a contended
+    environment). The corpus pass is map-only: cluster (nearest coarse
+    centroid via the broadcast centroid model row), codes (per-subspace
+    argmax via the broadcast codebook model row), and the stored norm
+    are all computed in one projection — the index-build scan — and
+    candidates are pruned to the probed clusters by a broadcast
+    (query, cluster) join BEFORE any scoring."""
+    cents_model = centroid_model_row(cent_df)
+    enc = nearest_centroids(
+        corpus.select(id_col, vec_col).crossJoin(
+            F.broadcast(books_model_row(books_df))
+        ),
+        cents_model,
+        1,
+        vec_col,
+    ).select(
+        F.col(id_col),
+        (-F.col("_near")[0]["nid"]).alias("cluster"),
+        model_row_codes(vec_col, n_sub, d).alias("codes"),
+        F.col("_vn").alias("vnorm"),
     )
     probes = (
-        q_scored.withColumn("_rn", F.row_number().over(w_probe))
-        .filter(F.col("_rn") <= n_probe)
-        .select("query_id", F.col("cent_id").alias("cluster"))
+        nearest_centroids(queries.select(id_col, vec_col), cents_model, n_probe, vec_col)
+        .select(F.col(id_col).alias("query_id"), F.explode("_near").alias("_p"))
+        .select("query_id", (-F.col("_p.nid")).alias("cluster"))
     )
-
-    # Prune first: only rows in a probed cluster are ever exploded or
-    # scored — at a billion vectors the scan that remains reads
-    # ~n_probe/n_clusters of the codes.
     cand = enc.join(F.broadcast(probes), "cluster").filter(
         F.col(id_col) != F.col("query_id")
     )
-    q_rows = queries.select(id_col, vec_col).collect()
-    lut = _lut_df(
-        spark, books, q_rows, queries.schema[id_col].dataType.simpleString()
-    )
-    exploded = cand.select(
-        "query_id", id_col, "vnorm", F.posexplode("codes").alias("sub", "code")
-    )
-    joined = exploded.join(F.broadcast(lut), ["query_id", "sub", "code"])
-    scored = (
-        joined.groupBy("query_id", id_col)
-        .agg(
-            F.aggregate(
-                F.array_sort(F.collect_list(F.struct("sub", "dot"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x.getField("dot"),
-            ).alias("num"),
-            F.first("qn").alias("qn"),
-            F.first("vnorm").alias("vnorm"),
-        )
-        .select(
-            "query_id",
-            id_col,
-            (F.col("num")
-             / (F.greatest(F.col("qn"), F.lit(1e-30))
-                * F.greatest(F.col("vnorm"), F.lit(1e-30)))).alias(
-                "approx_cosine"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_cosine"), F.asc(id_col)
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    lut = lut_table_df(queries, books_df, d, id_col, vec_col)
+    scored = _adc_scores(cand, lut, id_col, F.lit(0.0))
+    return _top_k(scored, k, "query_id", "approx_cosine", id_col).drop("rank")

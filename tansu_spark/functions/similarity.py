@@ -21,6 +21,10 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from tansu_spark.materialize import corpus_checkpoint
 
+# Width of the `embeddings` table's vectors: the LSH hyperplanes and the
+# two-half sign packing are laid out for it.
+N_DIMS = 64
+
 
 def dot(a: Column | str, b: Column | str) -> Column:
     prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
@@ -39,6 +43,16 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     # (_cos_sql) carries the identical floor.
     return dot(a, b) / (
         F.greatest(norm(a), F.lit(1e-30)) * F.greatest(norm(b), F.lit(1e-30))
+    )
+
+
+def _top_k(scored: DataFrame, k: int, part: str, score: str, tie: str) -> DataFrame:
+    """The k best rows of each `part` group by `score` descending, ties to
+    the lowest `tie`, numbered 1..k in a `rank` (long) column — the
+    per-query/per-source tail every top-k here ends with (one window)."""
+    w = Window.partitionBy(part).orderBy(F.desc(score), F.asc(tie))
+    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
+        F.col("rank") <= k
     )
 
 
@@ -118,12 +132,7 @@ def brute_force_topk(
             F.round(cosine("q_vec", vec_col), round_digits).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    return _top_k(scored, k, "query_id", "cosine", id_col).drop("rank")
 
 
 def _hyperplane_component(plane: int, dim: int) -> int:
@@ -173,7 +182,6 @@ def adaptive_planes(
 def with_lsh_bucket(
     df: DataFrame,
     n_planes: int = 4,
-    n_dims: int = 64,
     vec_col: str = "embedding",
     plane_offset: int = 0,
 ) -> DataFrame:
@@ -181,7 +189,7 @@ def with_lsh_bucket(
     [0, 2^n_planes). Computed as fixed ±1 dot products — pure column
     arithmetic, no UDF, no shuffle. `plane_offset` selects a disjoint
     plane set, so multi-band callers get independent bucketings."""
-    planes = hyperplanes(n_planes, n_dims, plane_offset)
+    planes = hyperplanes(n_planes, N_DIMS, plane_offset)
     bucket = F.lit(0)
     for p, plane in enumerate(planes):
         proj = F.aggregate(
@@ -202,15 +210,14 @@ def lsh_ann_topk(
     queries: DataFrame,
     k: int = 5,
     n_planes: int = 4,
-    n_dims: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_digits: int = 10,
 ) -> DataFrame:
     """Approximate top-k: candidates limited to the query's LSH bucket
     (equi-join on bucket), exact cosine re-rank within the bucket."""
-    cb = with_lsh_bucket(corpus, n_planes, n_dims, vec_col)
-    qb = with_lsh_bucket(queries, n_planes, n_dims, vec_col).select(
+    cb = with_lsh_bucket(corpus, n_planes, vec_col)
+    qb = with_lsh_bucket(queries, n_planes, vec_col).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"), "bucket"
     )
     scored = (
@@ -222,12 +229,7 @@ def lsh_ann_topk(
             F.round(cosine("q_vec", vec_col), round_digits).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    return _top_k(scored, k, "query_id", "cosine", id_col).drop("rank")
 
 
 def bucket_pair_scores(
@@ -396,7 +398,6 @@ def knn_graph_lsh(
     k: int = 5,
     n_bands: int = 2,
     n_planes: int | None = None,
-    n_dims: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_digits: int = 10,
@@ -426,7 +427,7 @@ def knn_graph_lsh(
         n_planes = adaptive_planes(df.count())
     bands = [
         with_lsh_bucket(
-            df, n_planes, n_dims, vec_col, plane_offset=b * BAND_STRIDE
+            df, n_planes, vec_col, plane_offset=b * BAND_STRIDE
         ).select(
             F.col(id_col),
             F.col(vec_col),
@@ -441,11 +442,7 @@ def knn_graph_lsh(
     scored = bucket_pair_scores(
         tagged, id_col=id_col, vec_col=vec_col, round_digits=round_digits
     )
-    w = Window.partitionBy("id_a").orderBy(F.desc("cosine"), F.asc("id_b"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(scored, k, "id_a", "cosine", "id_b")
 
 
 def lsh_multiprobe_topk(
@@ -453,7 +450,6 @@ def lsh_multiprobe_topk(
     queries: DataFrame,
     k: int = 5,
     n_planes: int = 4,
-    n_dims: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_digits: int = 10,
@@ -470,8 +466,8 @@ def lsh_multiprobe_topk(
     Plan: the probe set is a per-query exploded literal array (tiny);
     candidates come from ONE equi-join of the broadcast probe set
     against the bucketed corpus — the corpus never shuffles."""
-    cb = with_lsh_bucket(corpus, n_planes, n_dims, vec_col)
-    qb = with_lsh_bucket(queries, n_planes, n_dims, vec_col).select(
+    cb = with_lsh_bucket(corpus, n_planes, vec_col)
+    qb = with_lsh_bucket(queries, n_planes, vec_col).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"), "bucket"
     )
     probes = F.array(
@@ -490,11 +486,7 @@ def lsh_multiprobe_topk(
             F.round(cosine("q_vec", vec_col), round_digits).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(scored, k, "query_id", "cosine", id_col)
 
 
 def knn_graph_incremental(
@@ -504,7 +496,6 @@ def knn_graph_incremental(
     k: int = 5,
     n_bands: int = 2,
     n_planes: int | None = None,
-    n_dims: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_digits: int = 10,
@@ -539,7 +530,7 @@ def knn_graph_incremental(
     def tag(df: DataFrame) -> DataFrame:
         parts = [
             with_lsh_bucket(
-                df, n_planes, n_dims, vec_col, plane_offset=b * BAND_STRIDE
+                df, n_planes, vec_col, plane_offset=b * BAND_STRIDE
             ).select(
                 F.col(id_col),
                 F.col(vec_col),
@@ -576,16 +567,12 @@ def knn_graph_incremental(
     all_b = bb.unionByName(nb)
     from_new = score(nb, all_b)  # new sources: complete candidate set
     to_new = score(bb, nb)  # base sources: only their NEW candidates
-    w = Window.partitionBy("id_a").orderBy(F.desc("cosine"), F.asc("id_b"))
     merged = (
         base_graph.select("id_a", "id_b", "cosine")
         .unionByName(to_new)
         .unionByName(from_new)
     )
-    return (
-        merged.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(merged, k, "id_a", "cosine", "id_b")
 
 
 def _centroid_rows(
@@ -597,7 +584,7 @@ def _centroid_rows(
     mechanics (the part that matters for the distributed plan) are
     identical, and a seeded quantizer keeps the result oracle-checkable.
     Centroids are tiny model state (k x dims floats) — collecting them to
-    the driver and re-broadcasting as literals is the standard pattern.
+    the driver and re-broadcasting them is the standard pattern.
     """
     # Lowest-id rows of the given corpus (NOT `id < n`: when the caller
     # trains on a hash-sample, an absolute-id filter under-seeds).
@@ -612,7 +599,7 @@ def _centroid_rows(
 
 def _py_norm(v: list[float]) -> float:
     """sqrt of the left-fold sum of squares in f64 — the exact arithmetic
-    DuckDB's list_reduce + sqrt performs, so the literal is bit-identical
+    DuckDB's list_reduce + sqrt performs, so the value is bit-identical
     to the oracle's computed centroid norm."""
     import math
 
@@ -620,86 +607,6 @@ def _py_norm(v: list[float]) -> float:
     for x in v:
         acc += float(x) * float(x)
     return math.sqrt(acc)
-
-
-def _score_array(vec_col: str, cents: list[tuple[int, list[float]]], vnorm):
-    """array<struct<c: cosine, nid: -centroid_id>> — argmax via array_max
-    (struct comparison: cosine first, then -id, i.e. ties -> lowest id).
-    Pure column arithmetic against literal centroid vectors: the
-    assignment is map-only, no shuffle, no UDF. Centroid norms are
-    precomputed f64 literals and the row's own norm (`vnorm`) is computed
-    once and shared — one fold per centroid instead of three, which cuts
-    plan/codegen size 3x."""
-    return F.array(
-        *[
-            F.struct(
-                (
-                    dot(vec_col, F.array(*[F.lit(float(x)) for x in v]))
-                    / (F.greatest(vnorm, F.lit(1e-30)) * F.lit(max(_py_norm(v), 1e-30)))
-                ).alias("c"),
-                F.lit(-cid).alias("nid"),
-            )
-            for cid, v in cents
-        ]
-    )
-
-
-def ivf_assign(
-    corpus: DataFrame,
-    cents: list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Append `cluster`: id of the nearest (max-cosine) centroid."""
-    with_n = corpus.withColumn("_vn", norm(vec_col))
-    best = F.array_max(_score_array(vec_col, cents, F.col("_vn")))
-    return with_n.withColumn("cluster", -best.getField("nid")).drop("_vn")
-
-
-def score_array_packed(vec_col, cents: list[tuple[int, list[float]]], vnorm):
-    """Same scores and tie order as `_score_array`, but evaluated as ONE
-    `transform` over a literal centroid TABLE: the expression count (and
-    codegen/planning cost) is constant in k, where `_score_array` emits
-    k fold expressions. This is the scorer for quantizers whose k GROWS
-    with the corpus (dedup_semdedup_scaled's k = n/32): at 100 TB the
-    model is still a plan literal (k x dims doubles — the broadcast-
-    model pattern), but the plan no longer explodes with it.
-
-    Arithmetic parity with `_score_array` is exact: the same zip_with/
-    aggregate left fold over f64-cast elements, the same precomputed f64
-    centroid norm literal — same IEEE doubles, so either scorer may back
-    an oracled query interchangeably."""
-    packed = F.array(
-        *[
-            F.struct(
-                F.array(*[F.lit(float(x)) for x in v]).alias("cv"),
-                F.lit(max(_py_norm(v), 1e-30)).alias("cn"),
-                F.lit(-cid).alias("nid"),
-            )
-            for cid, v in cents
-        ]
-    )
-    col = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    return F.transform(
-        packed,
-        lambda c: F.struct(
-            (dot(col, c["cv"]) / (F.greatest(vnorm, F.lit(1e-30)) * c["cn"])).alias("c"),
-            c["nid"].alias("nid"),
-        ),
-    )
-
-
-def ivf_assign_packed(
-    corpus: DataFrame,
-    cents: list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """`ivf_assign` with the packed scorer — identical assignment, plan
-    size constant in k (use when k scales with the corpus)."""
-    with_n = corpus.withColumn("_vn", norm(vec_col))
-    best = F.array_max(score_array_packed(vec_col, cents, F.col("_vn")))
-    return with_n.withColumn("cluster", -best.getField("nid")).drop("_vn")
 
 
 def centroid_model_row(
@@ -748,20 +655,18 @@ def centroid_model_row(
     )
 
 
-def model_row_scores(vec_col, vnorm) -> Column:
+def model_row_scores(vec_col: str, vnorm: Column) -> Column:
     """array<struct<c: cosine, nid: -centroid_id>> against the attached
     model-row columns (_mids/_mcvs/_mcns from `centroid_model_row`) —
-    argmax via array_max, top-n via reverse-sorted slice, exactly like
-    `_score_array`/`score_array_packed` but with the model as DATA: plan
-    size is constant in k AND no collect built the model. Same f64
-    left-fold dot (zip_with/aggregate), so scores are bit-identical to
-    the literal scorers and the DuckDB oracle."""
-    col = F.col(vec_col) if isinstance(vec_col, str) else vec_col
+    ranked by `nearest_centroids`, the one caller. The model is DATA:
+    plan size is constant in k and no collect built the model. The dot
+    is the f64 left fold (zip_with/aggregate), so scores are
+    bit-identical to the DuckDB oracle and to `ivf_assign_fold`."""
     return F.transform(
         F.sequence(F.lit(0), F.size("_mids") - 1),
         lambda i: F.struct(
             (
-                dot(col, F.get("_mcvs", i))
+                dot(vec_col, F.get("_mcvs", i))
                 / (F.greatest(vnorm, F.lit(1e-30)) * F.get("_mcns", i))
             ).alias("c"),
             (-F.get("_mids", i)).alias("nid"),
@@ -770,6 +675,53 @@ def model_row_scores(vec_col, vnorm) -> Column:
             # by comparisons (c, nid) since ids are unique
             i.alias("idx"),
         ),
+    )
+
+
+def nearest_centroids(
+    df: DataFrame, model: DataFrame, n: int, vec_col: str = "embedding"
+) -> DataFrame:
+    """`df` crossJoined with the broadcast one-row centroid `model`
+    (`centroid_model_row`), plus `_vn` (the row's norm) and `_near`: its
+    n best `(c, nid, idx)` structs, best first — c the cosine, nid the
+    NEGATED centroid id (so struct order breaks cosine ties to the lowest
+    id), idx the centroid's position in the model arrays. n = 1 is
+    assignment, n = n_probe the IVF probe set. Map-only; the model
+    columns stay attached for callers that fetch `_mcvs[idx]`."""
+    return (
+        df.crossJoin(F.broadcast(model))
+        .withColumn("_vn", norm(vec_col))
+        .withColumn(
+            "_near",
+            F.slice(
+                F.sort_array(model_row_scores(vec_col, F.col("_vn")), asc=False),
+                1,
+                n,
+            ),
+        )
+    )
+
+
+def ivf_assign(
+    corpus: DataFrame,
+    cents: list[tuple[int, list[float]]],
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Nearest-centroid assignment against driver-side centroids `cents`
+    (seeded or `kmeans_centroids`-trained): they become a one-row model
+    table scored by `nearest_centroids`. Same output as
+    `ivf_assign_fold`: (id_col, vec_col, _vn, cluster, cent_cos)."""
+    model = centroid_model_row(
+        corpus.sparkSession.createDataFrame(cents, "cent_id long, c_vec array<double>")
+    )
+    best = F.col("_near")[0]
+    return nearest_centroids(corpus, model, 1, vec_col).select(
+        id_col,
+        vec_col,
+        "_vn",
+        (-best["nid"]).alias("cluster"),
+        best["c"].alias("cent_cos"),
     )
 
 
@@ -783,47 +735,31 @@ def ivf_topk_model_df(
     vec_col: str = "embedding",
     round_digits: int = 10,
 ) -> DataFrame:
-    """IVF ANN serving against a centroid DataFrame — the ZERO-COLLECT
-    twin of `ivf_ann_topk`: the quantizer (seeded filter or a training
-    dataflow like `lloyd_means_df`) stays a distributed table, collapses
-    to one broadcast model row in-plan, and the whole query is ONE Spark
-    action — no serial model-collect jobs, no literal centroid trees
-    (the r6 driver-bench collapse was planning/scheduling overhead, not
-    compute). Catalyst reuses the single model-row broadcast across the
-    corpus-assignment and query-probe crossJoins.
+    """IVF-style approximate top-k against a centroid DataFrame: corpus
+    vectors are bucketed by nearest centroid (the inverted file); each
+    query probes its n_probe nearest centroids and re-ranks by exact
+    cosine within those clusters only, ties to lowest id everywhere.
+    Recall trades with n_probe exactly as in FAISS IVF.
 
-    Same semantics as `ivf_ann_topk`: corpus bucketed by nearest
-    centroid, queries probe their n_probe nearest, exact cosine re-rank
-    within probed clusters, ties to lowest id everywhere."""
+    Zero collects: the quantizer (seeded filter, a training dataflow
+    like `lloyd_means_df`, or driver-side centroids via
+    `createDataFrame`) collapses to one broadcast model row in-plan, and
+    the whole query is ONE Spark action — no serial model-collect jobs,
+    no literal centroid trees (the r6 driver-bench collapse was
+    planning/scheduling overhead, not compute). Catalyst reuses the
+    single model-row broadcast across the corpus-assignment and
+    query-probe crossJoins. Per-query work is |cluster| * n_probe, not
+    |corpus|."""
     model = centroid_model_row(cent_df)
-    cb = (
-        corpus.select(id_col, vec_col)
-        .crossJoin(F.broadcast(model))
-        .withColumn("_vn", norm(vec_col))
-        .select(
-            F.col(id_col),
-            F.col(vec_col),
-            (-F.array_max(model_row_scores(vec_col, F.col("_vn"))).getField("nid")).alias(
-                "cluster"
-            ),
-        )
+    cb = nearest_centroids(corpus.select(id_col, vec_col), model, 1, vec_col).select(
+        id_col, vec_col, (-F.col("_near")[0]["nid"]).alias("cluster")
     )
     qb = (
-        queries.select(id_col, vec_col)
-        .crossJoin(F.broadcast(model))
-        .withColumn("_vn", norm(vec_col))
+        nearest_centroids(queries.select(id_col, vec_col), model, n_probe, vec_col)
         .select(
             F.col(id_col).alias("query_id"),
             F.col(vec_col).alias("q_vec"),
-            F.explode(
-                F.slice(
-                    F.sort_array(
-                        model_row_scores(vec_col, F.col("_vn")), asc=False
-                    ),
-                    1,
-                    n_probe,
-                )
-            ).alias("_p"),
+            F.explode("_near").alias("_p"),
         )
         .select("query_id", "q_vec", (-F.col("_p.nid")).alias("cluster"))
     )
@@ -836,12 +772,7 @@ def ivf_topk_model_df(
             F.round(cosine("q_vec", vec_col), round_digits).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    return _top_k(scored, k, "query_id", "cosine", id_col).drop("rank")
 
 
 def lloyd_means_df(
@@ -893,7 +824,7 @@ def ivf_assign_fold(
     Norms fold the same way; ties break to the LOWEST centroid id via
     strict-greater replacement over ascending ids (== array_max on
     (score, -id)). Scores are therefore interchangeable with
-    `_score_array`/`score_array_packed` under the hash gate — pinned by
+    `ivf_assign`'s `model_row_scores` under the hash gate — pinned by
     test_similarity.py::test_fold_scorer_bit_identical.
 
     Scale: the model rides the task closure (k x dims f64 — broadcast
@@ -943,14 +874,14 @@ def ivf_assign_fold(
                     id_col: pdf[id_col].values,
                     vec_col: pdf[vec_col].values,
                     "_vn": vn,
-                    "cluster": best_c.astype(np.int32),
+                    "cluster": best_c,
                     "cent_cos": best_s,
                 }
             )
 
     schema = (
         f"{id_col} long, {vec_col} array<float>, _vn double, "
-        "cluster int, cent_cos double"
+        "cluster long, cent_cos double"
     )
     return corpus.select(id_col, vec_col).mapInPandas(kernel, schema)
 
@@ -1057,7 +988,6 @@ def kmeans_centroids(
     corpus: DataFrame,
     n_centroids: int = 16,
     n_iter: int = 2,
-    n_dims: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     train_frac: float | None = None,
@@ -1065,9 +995,9 @@ def kmeans_centroids(
     """Lloyd's k-means over the corpus — the trained coarse quantizer a
     production IVF index uses (vs. `_centroid_rows`' seeded one).
 
-    Each iteration is one map-only assignment pass (literal centroid
-    arithmetic, no UDF) + one groupBy(cluster) computing per-dimension
-    means. Means are aggregated in DECIMAL: float addition is not
+    Each iteration is one map-only assignment pass (`ivf_assign`: the
+    centroids as a broadcast model row, no UDF) + one groupBy(cluster)
+    computing per-dimension means. Means are aggregated in DECIMAL: float addition is not
     associative, so a double-sum would make the trained model depend on
     partitioning and retry order — decimal sums are exact, making the
     model bit-reproducible on any cluster layout. k x dims model state
@@ -1089,10 +1019,11 @@ def kmeans_centroids(
 
         corpus = hash_sample(corpus, id_col, train_frac)
     cents = _centroid_rows(corpus, n_centroids, id_col, vec_col)
+    width = len(cents[0][1])
     for _ in range(n_iter):
         assigned = ivf_assign(corpus, cents, id_col, vec_col)
         # Per-dim means via posexplode + ONE avg aggregate rather than
-        # n_dims wide decimal aggs: the exploded frame is n_dims x rows
+        # `width` wide decimal aggs: the exploded frame is width x rows
         # (still tiny next to the corpus bytes) but the plan carries one
         # aggregate expression instead of 64 — measured 2.6x faster per
         # round at sf0.1 with bit-identical results.
@@ -1104,78 +1035,15 @@ def kmeans_centroids(
         )
         new: dict[int, list[float]] = {}
         for r in rows:
-            new.setdefault(r["cluster"], [0.0] * n_dims)[r["dim"]] = float(r["m"])
+            new.setdefault(r["cluster"], [0.0] * width)[r["dim"]] = float(r["m"])
         cents = [(cid, new.get(cid, vec)) for cid, vec in cents]
     return cents
-
-
-def ivf_ann_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_centroids: int = 16,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 10,
-    cents: list[tuple[int, list[float]]] | None = None,
-) -> DataFrame:
-    """IVF-style approximate top-k: corpus vectors are bucketed by nearest
-    coarse centroid (the inverted file); each query probes its n_probe
-    nearest centroids and re-ranks exactly within those clusters only.
-
-    Scale path: assignment is a map-only pass (literal centroid math);
-    the candidate join is an equi-join on cluster id, so the corpus
-    shuffles once by cluster — per-query work is |cluster| * n_probe,
-    not |corpus|. Recall trades with n_probe exactly as in FAISS IVF.
-    Pass `cents` (e.g. from `kmeans_centroids`) to use a trained
-    quantizer instead of the seeded one.
-    """
-    if cents is None:
-        cents = _centroid_rows(corpus, n_centroids, id_col, vec_col)
-    # packed scorer: bit-identical to _score_array (pinned by
-    # test_fold_scorer_bit_identical) with plan size CONSTANT in k — the
-    # k-fold expression tree dominated this query's wall time (planning/
-    # codegen, not compute, at 16 x 64 literals; r6 verdict ask #3)
-    cb = ivf_assign_packed(corpus, cents, id_col, vec_col).select(
-        F.col(id_col), F.col(vec_col), "cluster"
-    )
-    probes = F.slice(
-        F.sort_array(score_array_packed(vec_col, cents, F.col("_vn")), asc=False),
-        1,
-        n_probe,
-    )
-    qb = (
-        queries.withColumn("_vn", norm(vec_col))
-        .withColumn("_probe", F.explode(probes))
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
-            (-F.col("_probe.nid")).alias("cluster"),
-        )
-    )
-    scored = (
-        cb.join(F.broadcast(qb), "cluster")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            id_col,
-            F.round(cosine("q_vec", vec_col), round_digits).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
 
 
 def cosine_near_dup_pairs(
     df: DataFrame,
     threshold: float = 0.9,
     n_planes: int | None = None,
-    n_dims: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_digits: int = 10,
@@ -1190,7 +1058,7 @@ def cosine_near_dup_pairs(
     stays ~64n, never quadratic."""
     if n_planes is None:
         n_planes = adaptive_planes(df.count())
-    b = with_lsh_bucket(df, n_planes, n_dims, vec_col).withColumn(
+    b = with_lsh_bucket(df, n_planes, vec_col).withColumn(
         "band", F.lit(0)
     )
     pairs = bucket_pair_scores(
@@ -1288,34 +1156,22 @@ def int8_rerank_topk(
             ).alias("approx"),
         )
     )
-    w1 = Window.partitionBy("query_id").orderBy(F.desc("approx"), F.asc(id_col))
-    short = (
-        scored.withColumn("_rn", F.row_number().over(w1))
-        .filter(F.col("_rn") <= shortlist)
-        .drop("_rn")
-    )
+    short = _top_k(scored, shortlist, "query_id", "approx", id_col).drop("rank")
     exact = short.select(
         "query_id",
         id_col,
         F.round("approx", round_digits).alias("approx_cosine"),
         F.round(cosine("qid_vec", "cid_vec"), round_digits).alias("cosine"),
     )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        exact.withColumn("_rn", F.row_number().over(w2))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    return _top_k(exact, k, "query_id", "cosine", id_col).drop("rank")
 
 
-def binary_pack(df: DataFrame, vec_col: str = "embedding", n_dims: int = 64) -> DataFrame:
+def binary_pack(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """1-bit (sign) quantization: each vector becomes two BIGINTs — bit d
     set iff dim d > 0 — 32x smaller than the f32 array. Two 32-bit halves
     instead of one 64-bit word keep the packing fold overflow-free in
     engines that reject `1 << 63` (DuckDB), and the pair costs the same
     two xor+popcount ops at query time. Pure codegen'd JVM fold, map-only."""
-    assert n_dims == 64, "packing layout is fixed at 64 dims (two halves)"
-
     def half(lo: int, hi: int, shift_base: int) -> str:
         return (
             f"aggregate(sequence({lo}, {hi}), 0L, (acc, d) -> "
@@ -1362,16 +1218,13 @@ def binary_hamming_topk(
         + F.bit_count(F.col("_bhi").bitwiseXOR(F.col("_qhi")))
     ).cast("long")
     short_w = Window.partitionBy("query_id").orderBy("hamming", id_col)
-    rank_w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), id_col
-    )
-    return (
+    short = (
         cp.join(F.broadcast(qp), F.col(id_col) != F.col("query_id"))
         .withColumn("hamming", hamming)
         .withColumn("_rn", F.row_number().over(short_w))
         .where(F.col("_rn") <= shortlist)
         .withColumn("cosine", F.round(cosine("q_vec", vec_col), round_digits))
-        .withColumn("_rk", F.row_number().over(rank_w))
-        .where(F.col("_rk") <= k)
-        .select("query_id", id_col, "hamming", "cosine")
+    )
+    return _top_k(short, k, "query_id", "cosine", id_col).select(
+        "query_id", id_col, "hamming", "cosine"
     )

@@ -100,7 +100,8 @@ def _reachable_helpers(fn) -> tuple[list, list[str], list[tuple[str, str]]]:
     * modules — tansu_spark modules referenced by name, INCLUDING
       function-local ``from tansu_spark.x.y import z`` statements (the
       dotted module path sits in ``co_names`` even though ``z`` binds as
-      a local), closed transitively over each module file's own
+      a local; when ``z`` is itself a submodule, ``x.y.z`` is recorded
+      too), closed transitively over each module file's own
       ``import tansu_spark...`` statements (whole-file granularity);
     * consts — referenced module-level DATA globals (band params, config
       tuples) as (name, repr) pairs, so tuning-constant edits also move
@@ -108,8 +109,15 @@ def _reachable_helpers(fn) -> tuple[list, list[str], list[tuple[str, str]]]:
 
     Returns (callables, module_names, consts), each deterministically
     ordered."""
+    import importlib.util
     import re
     import types
+
+    def is_module(dotted: str) -> bool:
+        try:
+            return importlib.util.find_spec(dotted) is not None
+        except (ImportError, AttributeError, ValueError):
+            return False
 
     def code_names(code) -> set[str]:
         names = set(code.co_names)
@@ -135,9 +143,17 @@ def _reachable_helpers(fn) -> tuple[list, list[str], list[tuple[str, str]]]:
         g = getattr(f, "__globals__", None)
         if code is None or g is None:
             continue
-        for name in sorted(code_names(code)):
+        names = code_names(code)
+        for name in sorted(names):
             if name.startswith("tansu_spark") and "." in name:
                 modules.add(name)  # function-local dotted import target
+                # `from tansu_spark.pkg import mod as X` puts only the
+                # package in co_names; `mod` sits beside it as a plain name
+                modules.update(
+                    f"{name}.{other}"
+                    for other in names
+                    if "." not in other and is_module(f"{name}.{other}")
+                )
                 continue
             v = g.get(name)
             if v is None:

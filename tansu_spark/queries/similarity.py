@@ -11,10 +11,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tansu_spark.functions import similarity as S
+from tansu_spark.functions.similarity import N_DIMS
 from tansu_spark.queries import query
 from tansu_spark.tables import load
-
-N_DIMS = 64
 
 
 def _dot_sql(a: str, b: str) -> str:
@@ -338,19 +337,11 @@ def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine ceiling is ~0.6, so a production 0.95 would be vacuous."""
     emb = _emb(spark, sf_dir)
     cents = S._centroid_rows(emb, 16, "vec_id", "embedding")
-    with_n = emb.withColumn("_vn", S.norm("embedding"))
-    best = F.array_max(S._score_array("embedding", cents, F.col("_vn")))
-    # Norms ride the assignment row (computed once per VECTOR, not per
-    # pair): the pairwise stage then does ONE fold per pair instead of
-    # three — same IEEE value, the oracle's sqrt(dot(x,x)) is exactly
-    # this _vn.
-    assigned = with_n.select(
-        "vec_id",
-        "embedding",
-        "_vn",
-        (-best.getField("nid")).alias("cluster"),
-        best.getField("c").alias("cent_cos"),
-    ).transform(corpus_checkpoint)  # assignment scan runs once, not 3x
+    # Norms ride the assignment row (`_vn`, computed once per VECTOR, not
+    # per pair): the pairwise stage then does ONE fold per pair instead
+    # of three — same IEEE value, the oracle's sqrt(dot(x,x)) is exactly
+    # this _vn. Checkpointed: the assignment scan runs once, not 3x.
+    assigned = S.ivf_assign(emb, cents).transform(corpus_checkpoint)
     a = assigned.alias("a")
     b = assigned.alias("b")
     pair_cos = S.dot("a.embedding", "b.embedding") / (
@@ -661,20 +652,9 @@ def sim_kmeans_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = emb.filter(F.col("vec_id") < 16).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_vec")
     )
-    model0 = S.centroid_model_row(seeds)
-    assign0 = (
-        emb.select("vec_id", "embedding")
-        .crossJoin(F.broadcast(model0))
-        .withColumn("_vn", S.norm("embedding"))
-        .select(
-            "embedding",
-            (
-                -F.array_max(
-                    S.model_row_scores("embedding", F.col("_vn"))
-                ).getField("nid")
-            ).alias("cluster"),
-        )
-    )
+    assign0 = S.nearest_centroids(
+        emb.select("vec_id", "embedding"), S.centroid_model_row(seeds), 1
+    ).select("embedding", (-F.col("_near")[0]["nid"]).alias("cluster"))
     # Materialize the 16-row trained-centroid table once: the serving
     # helper consumes the model under BOTH the corpus-bucket and
     # query-probe crossJoins, and without this the whole training
@@ -685,29 +665,6 @@ def sim_kmeans_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tcent = S.lloyd_means_df(assign0).localCheckpoint(eager=True)
     return S.ivf_topk_model_df(
         emb, emb.filter(F.col("vec_id") < 8), tcent, k=5, n_probe=2
-    )
-
-
-# Retired from the registry in round 3 (was rows-only): float k-means
-# training is model state, not hash-reproducible across engines, so the
-# driver gate could never verify it beyond a row count. The oracle-backed
-# serving coverage lives in sim_ivf_ann_topk (same probe/re-rank plan,
-# seeded quantizer) and the TRAINING invariants (argmax, objective
-# descent, partition-independence, hash-sample) stay pytest-checked in
-# tests/test_similarity.py — the function remains the public trained-IVF
-# entry point.
-def sim_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN with a TRAINED coarse quantizer: 2 Lloyd iterations of
-    k-means (decimal-exact means, so the model is identical on any
-    partitioning), then the same probe/re-rank plan as sim_ivf_ann_topk.
-    The iterative training is the part the reference engine cannot
-    express; the serving plan stays one corpus shuffle on cluster id."""
-    emb = _emb(spark, sf_dir)
-    # Train on a deterministic 50% hash-sample — the billion-scale IVF
-    # recipe (quantizer quality barely moves, training cost halves).
-    cents = S.kmeans_centroids(emb, n_centroids=16, n_iter=2, train_frac=0.5)
-    return S.ivf_ann_topk(
-        emb, emb.filter(F.col("vec_id") < 8), k=5, n_probe=2, cents=cents
     )
 
 
@@ -821,9 +778,10 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantized ANN (functions/pq.py): 8 subspace codebooks
     trained on a 50% hash-sample, corpus encoded to 8 one-byte codes +
     a stored norm (32x smaller than raw f32), then asymmetric-distance
-    top-5 for 8 queries via literal lookup tables — the scan reads codes,
-    never the original vectors. The compression half of a billion-vector
-    IVF-PQ index; compose with ivf_assign for the pruning half."""
+    top-5 for 8 queries via a broadcast lookup-table join — the scan
+    reads codes, never the original vectors. The compression half of a
+    billion-vector IVF-PQ index; pq.ivf_pq_topk_df adds the pruning
+    half."""
     from tansu_spark.functions import pq as P
 
     emb = _emb(spark, sf_dir)
@@ -1346,7 +1304,7 @@ def sim_ivfpq_topk_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPLETE IVF-PQ serving path under the exact-value gate:
     seeded coarse quantizer prunes each query to its 2 nearest clusters,
     seeded PQ codebooks score the survivors through lookup tables
-    (functions/pq.py::ivf_pq_topk). The oracle replays every stage —
+    (functions/pq.py::ivf_pq_topk_df). The oracle replays every stage —
     cluster assignment, probe selection, per-subspace code choice, and
     the ADC score as the SAME ordered fold (list(sc ORDER BY sub) with a
     prepended 0.0 reproduces Spark's left-to-right lookup additions) —
@@ -1478,23 +1436,18 @@ def sim_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cents_model = S.centroid_model_row(cent_df)
 
-    with_res = (
-        emb.select("vec_id", "embedding")
-        .crossJoin(F.broadcast(cents_model))
-        .withColumn("_vn", S.norm("embedding"))
-        .withColumn(
-            "_best", F.array_max(S.model_row_scores("embedding", F.col("_vn")))
-        )
-        .select(
-            "vec_id",
-            (-F.col("_best.nid")).alias("cluster"),
-            F.zip_with(
-                "embedding",
-                F.get("_mcvs", F.col("_best.idx")),
-                lambda x, c: x.cast("double") - c,
-            ).alias("r"),
-            F.col("_vn").alias("vnorm"),
-        )
+    best = F.col("_near")[0]
+    with_res = S.nearest_centroids(
+        emb.select("vec_id", "embedding"), cents_model, 1
+    ).select(
+        "vec_id",
+        (-best["nid"]).alias("cluster"),
+        F.zip_with(
+            "embedding",
+            F.get("_mcvs", best["idx"]),
+            lambda x, c: x.cast("double") - c,
+        ).alias("r"),
+        F.col("_vn").alias("vnorm"),
     )
     books_df = P.seeded_books_df(
         with_res.where((F.col("vec_id") >= 16) & (F.col("vec_id") < 32)),
@@ -1514,66 +1467,22 @@ def sim_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     queries = emb.filter(F.col("vec_id") < 8)
     probes = (
-        queries.select("vec_id", "embedding")
-        .crossJoin(F.broadcast(cents_model))
-        .withColumn("_vn", S.norm("embedding"))
-        .select(
-            "vec_id",
-            "embedding",
-            "_vn",
-            "_mcvs",
-            F.explode(
-                F.slice(
-                    F.sort_array(
-                        S.model_row_scores("embedding", F.col("_vn")), asc=False
-                    ),
-                    1,
-                    2,
-                )
-            ).alias("_p"),
-        )
+        S.nearest_centroids(queries.select("vec_id", "embedding"), cents_model, 2)
+        .select("vec_id", "embedding", "_mcvs", F.explode("_near").alias("_p"))
         .select(
             F.col("vec_id").alias("query_id"),
             (-F.col("_p.nid")).alias("cluster"),
             S.dot("embedding", F.get("_mcvs", F.col("_p.idx"))).alias("qc"),
-            F.col("_vn").alias("qn"),
         )
     )
-    lut = P.lut_table_df(queries, books_df, d=8).drop("qn")
+    lut = P.lut_table_df(queries, books_df, d=8)
 
     cand = enc.join(F.broadcast(probes), "cluster").filter(
         F.col("vec_id") != F.col("query_id")
     )
-    exploded = cand.select(
-        "query_id", "vec_id", "vnorm", "qc", "qn",
-        F.posexplode("codes").alias("sub", "code"),
-    )
-    joined = exploded.join(F.broadcast(lut), ["query_id", "sub", "code"])
-    scored = (
-        joined.groupBy("query_id", "vec_id")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("sub", "dot"))).alias("_l"),
-            F.first("qc").alias("qc"),
-            F.first("qn").alias("qn"),
-            F.first("vnorm").alias("vnorm"),
-        )
-        .select(
-            "query_id",
-            "vec_id",
-            (
-                F.aggregate("_l", F.col("qc"), lambda a, x: a + x.getField("dot"))
-                / (
-                    F.greatest(F.col("qn"), F.lit(1e-30))
-                    * F.greatest(F.col("vnorm"), F.lit(1e-30))
-                )
-            ).alias("raw"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("raw"), F.asc("vec_id"))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= 5)
-        .select("query_id", "vec_id", F.round("raw", 10).alias("approx_cosine"))
+    scored = P._adc_scores(cand, lut, "vec_id", F.col("qc"))
+    return S._top_k(scored, 5, "query_id", "approx_cosine", "vec_id").select(
+        "query_id", "vec_id", F.round("approx_cosine", 10).alias("approx_cosine")
     )
 
 
@@ -1620,12 +1529,7 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(S.cosine("q_vec", "embedding"), 10).alias("cosine"),
         )
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return scored.withColumn("_rn", F.row_number().over(w)).filter(
-        F.col("_rn") <= 5
-    ).drop("_rn")
+    return S._top_k(scored, 5, "query_id", "cosine", "vec_id").drop("rank")
 
 
 @query(
@@ -1941,13 +1845,8 @@ def sim_rank_fusion_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.filter(F.col("vec_id") < 8)
 
     def ranked(run: DataFrame) -> DataFrame:
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), "vec_id"
-        )
-        return (
-            run.withColumn("rnk", F.row_number().over(w))
-            .where(F.col("rnk") <= 10)
-            .select("query_id", "vec_id", "rnk")
+        return S._top_k(run, 10, "query_id", "cosine", "vec_id").select(
+            "query_id", "vec_id", F.col("rank").alias("rnk")
         )
 
     lsh_run = ranked(S.lsh_ann_topk(emb, q, k=10))
@@ -1969,11 +1868,8 @@ def sim_rank_fusion_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("rrf"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("rrf").desc(), "vec_id")
-    return (
-        fused.withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") <= 5)
-        .select("query_id", "vec_id", F.round("rrf", 10).alias("rrf"))
+    return S._top_k(fused, 5, "query_id", "rrf", "vec_id").select(
+        "query_id", "vec_id", F.round("rrf", 10).alias("rrf")
     )
 
 

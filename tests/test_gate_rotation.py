@@ -63,6 +63,13 @@ def test_reachable_helpers_sees_shared_kernels_and_local_imports():
     _, mods, _ = _reachable_helpers(QUERIES["lake_restore_version"])
     assert "tansu_spark.lake.snapshots" in mods
 
+    # (d) `from tansu_spark.pkg import module as X` inside the function:
+    # co_names holds only the package, yet edits to the module must count.
+    _, mods, _ = _reachable_helpers(QUERIES["sim_ivfpq_topk_seeded"])
+    assert "tansu_spark.functions.pq" in mods
+    _, mods, _ = _reachable_helpers(QUERIES["text_kneser_ney_lm"])
+    assert "tansu_spark.functions.text" in mods
+
 
 def test_ordered_names_is_a_permutation_of_the_registry(entry_mod):
     from tansu_spark.queries import QUERIES

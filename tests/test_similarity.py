@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from tansu_spark.functions import similarity as S
@@ -63,7 +64,8 @@ def test_kmeans_training_improves_objective(spark, sf_dir):
 def test_ivf_kmeans_topk_shape(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings")
     cents = S.kmeans_centroids(emb, n_centroids=16, n_iter=1)
-    out = S.ivf_ann_topk(emb, emb.filter(F.col("vec_id") < 4), k=5, n_probe=2, cents=cents)
+    cent_df = spark.createDataFrame(cents, "cent_id long, c_vec array<double>")
+    out = S.ivf_topk_model_df(emb, emb.filter(F.col("vec_id") < 4), cent_df, k=5, n_probe=2)
     rows = out.collect()
     assert {r["query_id"] for r in rows} == {0, 1, 2, 3}
     for r in rows:
@@ -125,22 +127,29 @@ def test_int8_rerank_zero_vector_guard(spark):
             assert r["approx_cosine"] == 0.0, r
 
 
-def test_fold_scorer_bit_identical_to_column_scorer(spark, sf_dir):
+@pytest.mark.parametrize("id_offset", [0, 2**32])
+def test_fold_scorer_bit_identical_to_column_scorer(spark, sf_dir, id_offset):
     """ivf_assign_fold (Arrow-batched dim-ordered numpy fold) must
-    produce BIT-IDENTICAL scores/assignments to the column scorers
-    (_score_array / score_array_packed): same left-fold rounding
-    sequence, same lowest-id tie rule — the property that lets the
-    fast scorer back oracled queries (dedup_semdedup_scaled)."""
+    produce BIT-IDENTICAL scores/assignments to the column scorer
+    (model_row_scores over the one-row centroid model): same left-fold
+    rounding sequence, same lowest-id tie rule — the property that lets
+    the fast scorer back oracled queries (dedup_semdedup_scaled). Ids
+    past 2**31 must come back unnarrowed."""
     from pyspark.sql import functions as F
 
     from tansu_spark.tables import load
 
-    emb = load(spark, sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings").withColumn(
+        "vec_id", F.col("vec_id") + F.lit(id_offset)
+    )
     cents = S._centroid_rows(emb, 23, "vec_id", "embedding")  # odd k on purpose
 
     col_version = S.ivf_assign(emb, cents)
-    with_n = emb.withColumn("_vn", S.norm("embedding"))
-    best = F.array_max(S.score_array_packed("embedding", cents, F.col("_vn")))
+    model = S.centroid_model_row(
+        spark.createDataFrame(cents, "cent_id long, c_vec array<double>")
+    )
+    with_n = emb.crossJoin(F.broadcast(model)).withColumn("_vn", S.norm("embedding"))
+    best = F.array_max(S.model_row_scores("embedding", F.col("_vn")))
     packed = with_n.select(
         "vec_id",
         (-best.getField("nid")).alias("cluster"),

@@ -9,7 +9,7 @@ superlinearly (name it, fix it)?
 The stage tables are the same dataflows the queries run — either the
 queries' own shared helpers (`_winnow_fps_cached`, `_chunk_shingle_rows`,
 `_dedup_chain`) or the identical public building blocks
-(`lsh_bands`, `centroid_model_row`/`model_row_scores`) — so the counts
+(`lsh_bands`, `centroid_model_row`/`nearest_centroids`) — so the counts
 are the rows the real plans shuffle, not estimates.
 
 Run: python tools/stage_attribution.py            (sf0.1 + sf1, ~10 min)
@@ -184,64 +184,61 @@ def _stages_capstone(spark, sf_dir):
     return out
 
 
-def _stages_ivfpq_residual(spark, sf_dir):
-    """sim_ivfpq_residual_topk (sf1 7.22x). Serving cost = encoded corpus
-    rows (one ADC row per vector) + the scored subset: rows of the 2
-    probed clusters per query. Assignment replicated via the query's own
-    centroid_model_row/model_row_scores helpers."""
+def _ivf_probe_rows(emb, model):
+    """(probe rows, scored candidate rows) when queries vec_id < 8 probe
+    their 2 nearest clusters of the centroid `model` row: the corpus
+    assignment and the probe set come from the queries' own
+    `nearest_centroids` helper, so the counts are the rows the real
+    plans join."""
     from pyspark.sql import functions as F
 
     from tansu_spark.functions import similarity as S
-    from tansu_spark.tables import load
 
-    emb = load(spark, sf_dir, "embeddings")
-    n = emb.count()
-    cents_model = S.centroid_model_row(
-        emb.filter(F.col("vec_id") < 16).select(
-            F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_vec")
-        )
+    csz = (
+        S.nearest_centroids(emb.select("vec_id", "embedding"), model, 1)
+        .groupBy((-F.col("_near")[0]["nid"]).alias("cluster"))
+        .agg(F.count(F.lit(1)).alias("n"))
     )
-    assign = (
-        emb.select("vec_id", "embedding")
-        .crossJoin(F.broadcast(cents_model))
-        .withColumn("_vn", S.norm("embedding"))
-        .select(
-            "vec_id",
-            (-F.array_max(
-                S.model_row_scores("embedding", F.col("_vn"))
-            )["nid"]).alias("cluster"),
-        )
-    )
-    csz = assign.groupBy("cluster").agg(F.count(F.lit(1)).alias("n"))
     probes = (
-        emb.filter(F.col("vec_id") < 8)
-        .select("vec_id", "embedding")
-        .crossJoin(F.broadcast(cents_model))
-        .withColumn("_vn", S.norm("embedding"))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.explode(
-                F.slice(
-                    F.sort_array(
-                        S.model_row_scores("embedding", F.col("_vn")),
-                        asc=False,
-                    ),
-                    1,
-                    2,
-                )
-            ).alias("_p"),
+        S.nearest_centroids(
+            emb.filter(F.col("vec_id") < 8).select("vec_id", "embedding"), model, 2
         )
-        .select("query_id", (-F.col("_p")["nid"]).alias("cluster"))
+        .select(F.col("vec_id").alias("query_id"), F.explode("_near").alias("_p"))
+        .select("query_id", (-F.col("_p.nid")).alias("cluster"))
     )
     scored = (
         probes.join(csz, "cluster")
         .agg(F.sum("n").cast("long").alias("s"))
         .collect()[0]["s"]
     )
+    return probes.count(), int(scored)
+
+
+def _seed_model(emb):
+    """The seeded quantizer's model row: the 16 lowest-id vectors."""
+    from pyspark.sql import functions as F
+
+    from tansu_spark.functions import similarity as S
+
+    return S.centroid_model_row(
+        emb.filter(F.col("vec_id") < 16).select(
+            F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_vec")
+        )
+    )
+
+
+def _stages_ivfpq_residual(spark, sf_dir):
+    """sim_ivfpq_residual_topk (sf1 7.22x). Serving cost = encoded corpus
+    rows (one ADC row per vector) + the scored subset: rows of the 2
+    probed clusters per query."""
+    from tansu_spark.tables import load
+
+    emb = load(spark, sf_dir, "embeddings")
+    n_probes, scored = _ivf_probe_rows(emb, _seed_model(emb))
     return [
-        ("embeddings (encoded ADC rows)", n),
-        ("probe rows (8 queries x 2 clusters)", probes.count()),
-        ("scored candidate rows (probed-cluster members)", int(scored)),
+        ("embeddings (encoded ADC rows)", emb.count()),
+        ("probe rows (8 queries x 2 clusters)", n_probes),
+        ("scored candidate rows (probed-cluster members)", scored),
     ]
 
 
@@ -298,71 +295,16 @@ def _stages_kmeans_trained(spark, sf_dir):
     from tansu_spark.tables import load
 
     emb = load(spark, sf_dir, "embeddings")
-    n = emb.count()
-    seeds = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_vec")
-    )
-    model0 = S.centroid_model_row(seeds)
-    assign0 = (
-        emb.select("vec_id", "embedding")
-        .crossJoin(F.broadcast(model0))
-        .withColumn("_vn", S.norm("embedding"))
-        .select(
-            "vec_id",
-            "embedding",
-            (
-                -F.array_max(
-                    S.model_row_scores("embedding", F.col("_vn"))
-                ).getField("nid")
-            ).alias("cluster"),
-        )
-    )
-    tcent = S.lloyd_means_df(assign0.select("embedding", "cluster"))
-    tmodel = S.centroid_model_row(tcent)
-    assign1 = (
-        emb.select("vec_id", "embedding")
-        .crossJoin(F.broadcast(tmodel))
-        .withColumn("_vn", S.norm("embedding"))
-        .select(
-            "vec_id",
-            (
-                -F.array_max(
-                    S.model_row_scores("embedding", F.col("_vn"))
-                ).getField("nid")
-            ).alias("cluster"),
-        )
-    )
-    csz = assign1.groupBy("cluster").agg(F.count(F.lit(1)).alias("n"))
-    probes = (
-        emb.filter(F.col("vec_id") < 8)
-        .select("vec_id", "embedding")
-        .crossJoin(F.broadcast(tmodel))
-        .withColumn("_vn", S.norm("embedding"))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.explode(
-                F.slice(
-                    F.sort_array(
-                        S.model_row_scores("embedding", F.col("_vn")),
-                        asc=False,
-                    ),
-                    1,
-                    2,
-                )
-            ).alias("_p"),
-        )
-        .select("query_id", (-F.col("_p")["nid"]).alias("cluster"))
-    )
-    scored = (
-        probes.join(csz, "cluster")
-        .agg(F.sum("n").cast("long").alias("s"))
-        .collect()[0]["s"]
-    )
+    assign0 = S.nearest_centroids(
+        emb.select("vec_id", "embedding"), _seed_model(emb), 1
+    ).select("embedding", (-F.col("_near")[0]["nid"]).alias("cluster"))
+    tcent = S.lloyd_means_df(assign0)
+    n_probes, scored = _ivf_probe_rows(emb, S.centroid_model_row(tcent))
     return [
-        ("embeddings (train assignment rows)", n),
+        ("embeddings (train assignment rows)", emb.count()),
         ("trained centroid rows (fixed)", tcent.count()),
-        ("probe rows (8 queries x 2 clusters)", probes.count()),
-        ("scored candidate rows (probed-cluster members)", int(scored)),
+        ("probe rows (8 queries x 2 clusters)", n_probes),
+        ("scored candidate rows (probed-cluster members)", scored),
         ("output rows (8 x top-5)",
          QUERIES["sim_kmeans_trained_topk"](spark, sf_dir).count()),
     ]
@@ -374,61 +316,16 @@ def _stages_ivf_ann(spark, sf_dir):
     sim_ivfpq_residual_topk: the scale axes are the corpus assignment
     rows (one per vector) and the probed-cluster candidate rows; the
     model stays a fixed 16-row broadcast."""
-    from pyspark.sql import functions as F
-
-    from tansu_spark.functions import similarity as S
     from tansu_spark.queries import QUERIES
     from tansu_spark.tables import load
 
     emb = load(spark, sf_dir, "embeddings")
-    n = emb.count()
-    cents_model = S.centroid_model_row(
-        emb.filter(F.col("vec_id") < 16).select(
-            F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_vec")
-        )
-    )
-    assign = (
-        emb.select("vec_id", "embedding")
-        .crossJoin(F.broadcast(cents_model))
-        .withColumn("_vn", S.norm("embedding"))
-        .select(
-            "vec_id",
-            (-F.array_max(
-                S.model_row_scores("embedding", F.col("_vn"))
-            )["nid"]).alias("cluster"),
-        )
-    )
-    csz = assign.groupBy("cluster").agg(F.count(F.lit(1)).alias("n"))
-    probes = (
-        emb.filter(F.col("vec_id") < 8)
-        .select("vec_id", "embedding")
-        .crossJoin(F.broadcast(cents_model))
-        .withColumn("_vn", S.norm("embedding"))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.explode(
-                F.slice(
-                    F.sort_array(
-                        S.model_row_scores("embedding", F.col("_vn")),
-                        asc=False,
-                    ),
-                    1,
-                    2,
-                )
-            ).alias("_p"),
-        )
-        .select("query_id", (-F.col("_p")["nid"]).alias("cluster"))
-    )
-    scored = (
-        probes.join(csz, "cluster")
-        .agg(F.sum("n").cast("long").alias("s"))
-        .collect()[0]["s"]
-    )
+    n_probes, scored = _ivf_probe_rows(emb, _seed_model(emb))
     return [
-        ("embeddings (assignment rows)", n),
+        ("embeddings (assignment rows)", emb.count()),
         ("seed centroid rows (fixed)", 16),
-        ("probe rows (8 queries x 2 clusters)", probes.count()),
-        ("scored candidate rows (probed-cluster members)", int(scored)),
+        ("probe rows (8 queries x 2 clusters)", n_probes),
+        ("scored candidate rows (probed-cluster members)", scored),
         ("output rows (8 x top-5)",
          QUERIES["sim_ivf_ann_topk"](spark, sf_dir).count()),
     ]
