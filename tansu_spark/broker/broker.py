@@ -38,13 +38,14 @@ Scale design:
 
 from __future__ import annotations
 
+import contextlib
 import os
 import time
 import uuid
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -438,16 +439,18 @@ class Broker:
                     ),
                 )
 
-        # Schema validation before taking the write lock (pg.rs:801-823;
-        # bypass via tansu.schema.validation=false, FIXTURES.md §10).
+        # Schema validation rides the write job (validate → append → bump
+        # the watermark in one pass, pg.rs:801-823): only the per-row
+        # validity column is built here, outside the lock; the write's
+        # observation counts its false rows. Bypass via
+        # tansu.schema.validation=false (FIXTURES.md §10).
+        valid = F.lit(True)
         if (
             self.registry is not None
             and cfg.config.get("tansu.schema.validation", "true") != "false"
         ):
             with M.timed("registry_validation_duration"):
-                self.registry.validate(
-                    topic, out, wire=cfg.config.get("tansu.schema.wire", "json")
-                )
+                valid = self.registry.valid_column(topic, out, wire=wire_cfg)
 
         with file_lock(self._state(topic, ".lock")):
             # Idempotence fence — CHECKED here, but the advanced fence is
@@ -487,34 +490,33 @@ class Broker:
                     for x in (F.lit(int(p)), F.lit(int(m["high"])))
                 ]
             )
-            from pyspark.sql import Window
-
             w = Window.partitionBy("partition").orderBy("_seq")
             staged = (
-                out.withColumn("_seq", F.monotonically_increasing_id())
+                out.withColumn("_valid", valid)
+                .withColumn("_seq", F.monotonically_increasing_id())
                 .withColumn(
                     "offset",
                     (base[F.col("partition")] + F.row_number().over(w) - 1).cast("long"),
                 )
                 .withColumn("txn_id", F.lit(txn_id).cast("string"))
                 .withColumn("control", F.lit(0))
-                .select([f.name for f in RECORD_SCHEMA.fields])
+                .select(*[f.name for f in RECORD_SCHEMA.fields], "_valid")
             )
 
-            # Per-partition row counts ride the write job as observation
-            # metrics (bounded: one conditional count per partition) — a
-            # separate count action would execute the whole input twice.
-            from pyspark.sql import Observation
-
+            # Invalid-record and per-partition row counts ride the write
+            # job as observation metrics (bounded: one conditional count
+            # per partition) — a separate count action would execute the
+            # whole input twice.
             obs = Observation()
             observed = staged.observe(
                 obs,
                 F.count(F.lit(1)).alias("total"),
+                F.count(F.when(~F.col("_valid"), 1)).alias("bad"),
                 *[
                     F.count(F.when(F.col("partition") == p, 1)).alias(f"p{p}")
                     for p in range(cfg.partitions)
                 ],
-            )
+            ).drop("_valid")
 
             # Land files first, bump watermarks second (visibility order).
             # Per-BATCH codec choice (deflated.rs:341-380: each record
@@ -525,76 +527,83 @@ class Broker:
             # footers carry the codec per column chunk, the exact
             # mechanism the reference's record-batch attribute plays).
             codec = _PARQUET_CODECS[cfg.config.get("compression.type", "producer")]
-            pre_files: set[str] = set()
-            if txn_id is not None:
-                # Snapshot segments BEFORE the write so a terminal-txn
-                # race can scrub exactly the files this produce landed
-                # (we hold the topic lock — no concurrent writer).
-                pre_files = self._segment_files(topic)
-            # One write task per Kafka partition: without this, AQE
-            # coalesces the offset-window's 8 small shuffle partitions
-            # into ONE post-shuffle task (batch bytes < the 64 MB
-            # advisory size), serializing parquet encoding — measured
-            # 25k rec/s single-task vs ~2x with per-partition tasks at
-            # batch 50k. The explicit repartition pins parallelism to
-            # the topic's partition count AND yields exactly one segment
-            # file per (produce, partition) — fewer files for fetch and
-            # the segment-stats manifest.
-            observed.repartition(cfg.partitions, F.col("partition")).write.mode(
-                "append"
-            ).option(
-                "compression", codec
-            ).partitionBy("partition").parquet(self._data_dir(topic))
-            got = obs.get
-            counts = {
-                p: int(got[f"p{p}"])
-                for p in range(cfg.partitions)
-                if int(got[f"p{p}"]) > 0
-            }
-            if sum(counts.values()) != int(got["total"]):
-                raise ValueError(
-                    f"produce to {topic!r}: rows target partitions outside "
-                    f"[0, {cfg.partitions}) — unknown partition, like the "
-                    "reference's UNKNOWN_TOPIC_OR_PARTITION"
-                )
-            result: dict[int, int] = {}
-            for p, n in counts.items():
-                m = marks.setdefault(str(p), {"low": 0, "high": 0})
-                result[p] = int(m["high"])
-                m["high"] = int(m["high"]) + int(n)
+            # Snapshot segments BEFORE the write: the one reject path below
+            # scrubs exactly the files this produce landed (we hold the
+            # topic lock — no concurrent writer).
+            pre_files = self._segment_files(topic)
+            with contextlib.ExitStack() as txn_locked:
+                try:
+                    # One write task per Kafka partition: without this,
+                    # AQE coalesces the offset-window's 8 small shuffle
+                    # partitions into ONE post-shuffle task (batch bytes <
+                    # the 64 MB advisory size), serializing parquet
+                    # encoding — measured 25k rec/s single-task vs ~2x
+                    # with per-partition tasks at batch 50k. The explicit
+                    # repartition pins parallelism to the topic's
+                    # partition count AND yields exactly one segment file
+                    # per (produce, partition) — fewer files for fetch and
+                    # the segment-stats manifest.
+                    observed.repartition(cfg.partitions, F.col("partition")).write.mode(
+                        "append"
+                    ).option(
+                        "compression", codec
+                    ).partitionBy("partition").parquet(self._data_dir(topic))
+                    got = obs.get
+                    if int(got["bad"]):
+                        raise self.registry.rejection(topic, int(got["bad"]))
+                    counts = {
+                        p: int(got[f"p{p}"])
+                        for p in range(cfg.partitions)
+                        if int(got[f"p{p}"]) > 0
+                    }
+                    if sum(counts.values()) != int(got["total"]):
+                        raise ValueError(
+                            f"produce to {topic!r}: rows target partitions outside "
+                            f"[0, {cfg.partitions}) — unknown partition, like the "
+                            "reference's UNKNOWN_TOPIC_OR_PARTITION"
+                        )
+                    if txn_id is not None:
+                        # AddPartitionsToTxn (lib.rs:1480-1517): the
+                        # terminal-txn re-check, range registration AND the
+                        # watermark bump all happen under the STORE-GLOBAL
+                        # txn lock — if EndTxn/the sweep flipped the txn
+                        # terminal while the segment write ran, the produce
+                        # is rejected below WITHOUT bumping the watermark.
+                        txn_locked.enter_context(file_lock(self._txn_lock_path()))
+                        txns = read_json(self._txns_path(), {})
+                        t = txns.setdefault(
+                            txn_id,
+                            {"state": "open", "topics": {}, "started_at": time.time()},
+                        )
+                        if t["state"] != "open":
+                            raise InvalidTxnState(
+                                f"produce into {t['state']} txn {txn_id!r}"
+                            )
+                except BaseException:
+                    # The one reject path (invalid records, unknown
+                    # partitions, a raced-terminal txn): remove what the
+                    # write landed and re-raise. The watermark never moved,
+                    # so nothing invalid became visible, and the next
+                    # produce reuses these offsets against a clean
+                    # directory — an orphan segment would duplicate them.
+                    self._scrub_segments(topic, self._segment_files(topic) - pre_files)
+                    raise
 
-            if txn_id is not None:
-                # AddPartitionsToTxn (lib.rs:1480-1517): register this
-                # topic's produced ranges under the STORE-GLOBAL txn —
-                # one transaction spans topics, like the reference's
-                # txn_topition/txn_produce_offset tables. The terminal-txn
-                # re-check, range registration AND the watermark bump all
-                # happen under the txn lock: if EndTxn/the sweep flipped
-                # the txn terminal while the segment write ran, we scrub
-                # the just-landed files and raise WITHOUT bumping the
-                # watermark — unregistered transactional records can never
-                # enter the visible offset space, and the next produce
-                # reuses these offsets against a clean directory.
-                with file_lock(self._txn_lock_path()):
-                    txns = read_json(self._txns_path(), {})
-                    t = txns.setdefault(
-                        txn_id,
-                        {"state": "open", "topics": {}, "started_at": time.time()},
-                    )
-                    if t["state"] != "open":
-                        self._scrub_segments(
-                            topic, self._segment_files(topic) - pre_files
-                        )
-                        raise InvalidTxnState(
-                            f"produce into {t['state']} txn {txn_id!r}"
-                        )
+                # The commit point: nothing from here on is scrubbed.
+                result: dict[int, int] = {}
+                for p, n in counts.items():
+                    m = marks.setdefault(str(p), {"low": 0, "high": 0})
+                    result[p] = int(m["high"])
+                    m["high"] = int(m["high"]) + int(n)
+                if txn_id is not None:
+                    # Register this topic's produced ranges under the txn
+                    # — one transaction spans topics, like the reference's
+                    # txn_topition/txn_produce_offset tables.
                     ranges = t["topics"].setdefault(topic, {})
                     for p, n in counts.items():
                         lo, _ = ranges.get(str(p), [result[p], result[p]])
                         ranges[str(p)] = [min(lo, result[p]), result[p] + n]
                     write_json_atomic(self._txns_path(), txns)
-                    self._commit_marks_and_fences(topic, marks, fences)
-            else:
                 self._commit_marks_and_fences(topic, marks, fences)
             self._refresh_segment_stats(topic)
         return result
@@ -793,8 +802,8 @@ class Broker:
 
     def _segment_files(self, topic: str) -> set[str]:
         """Absolute paths of every parquet segment in the topic's data dir
-        (driver-side listing; used to scrub the exact files a raced
-        transactional produce landed)."""
+        (driver-side listing: the segment-stats manifest, fetch pruning,
+        and the produce reject path's before/after snapshot)."""
         out: set[str] = set()
         for root, _dirs, names in os.walk(self._data_dir(topic)):
             out.update(
@@ -803,8 +812,8 @@ class Broker:
         return out
 
     def _scrub_segments(self, topic: str, files: set[str]) -> None:
-        """Remove the segments a raced transactional produce landed, plus
-        the write's leftovers: the _SUCCESS marker Spark drops at the data
+        """Remove the segments a rejected produce landed, plus the write's
+        leftovers: the _SUCCESS marker Spark drops at the data
         root and any partition=N directory the scrub emptied. Readers that
         already listed these files tolerate the removal via
         ignoreMissingFiles on every broker scan."""
@@ -832,26 +841,23 @@ class Broker:
         data = self._data_dir(topic)
         manifest = read_json(self._segment_stats_path(topic), {"files": {}})
         seen = {}
-        for root, _dirs, names in os.walk(data):
-            for n in names:
-                if not n.endswith(".parquet"):
-                    continue
-                rel = os.path.relpath(os.path.join(root, n), data)
-                if rel in manifest["files"]:
-                    seen[rel] = manifest["files"][rel]
-                    continue
-                md = pq.ParquetFile(os.path.join(data, rel)).metadata
-                idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-                lo = hi = None
-                if "offset" in idx:
-                    for g in range(md.num_row_groups):
-                        st = md.row_group(g).column(idx["offset"]).statistics
-                        if st is None or not st.has_min_max:
-                            lo = hi = None
-                            break
-                        lo = st.min if lo is None else min(lo, st.min)
-                        hi = st.max if hi is None else max(hi, st.max)
-                seen[rel] = {"offset": [lo, hi]}
+        for path in self._segment_files(topic):
+            rel = os.path.relpath(path, data)
+            if rel in manifest["files"]:
+                seen[rel] = manifest["files"][rel]
+                continue
+            md = pq.ParquetFile(path).metadata
+            idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
+            lo = hi = None
+            if "offset" in idx:
+                for g in range(md.num_row_groups):
+                    st = md.row_group(g).column(idx["offset"]).statistics
+                    if st is None or not st.has_min_max:
+                        lo = hi = None
+                        break
+                    lo = st.min if lo is None else min(lo, st.min)
+                    hi = st.max if hi is None else max(hi, st.max)
+            seen[rel] = {"offset": [lo, hi]}
         manifest["files"] = seen
         write_json_atomic(self._segment_stats_path(topic), manifest)
 
@@ -865,14 +871,10 @@ class Broker:
             return None
         data = self._data_dir(topic)
         keep = []
-        for root, _dirs, names in os.walk(data):
-            for n in names:
-                if not n.endswith(".parquet"):
-                    continue
-                rel = os.path.relpath(os.path.join(root, n), data)
-                st = manifest["files"].get(rel)
-                if st is None or st["offset"][1] is None or st["offset"][1] >= offset_lo:
-                    keep.append(os.path.join(data, rel))
+        for path in self._segment_files(topic):
+            st = manifest["files"].get(os.path.relpath(path, data))
+            if st is None or st["offset"][1] is None or st["offset"][1] >= offset_lo:
+                keep.append(path)
         if not keep:
             return self.spark.createDataFrame([], RECORD_SCHEMA)
         # basePath keeps partition=N directory discovery over the file list.
@@ -1273,19 +1275,6 @@ class Broker:
         """Snapshot of the store-global txn registry (introspection —
         the describe side of the coordinator)."""
         return read_json(self._txns_path(), {})
-
-    def describe_cluster(self) -> dict[str, Any]:
-        """DescribeCluster: stable cluster identity (UUIDv5 over the
-        store root path — every broker on this store derives the same id
-        with no coordination) plus topic/partition totals."""
-        topics = self.topics()
-        return {
-            "cluster_id": str(
-                uuid.uuid5(uuid.NAMESPACE_URL, f"tag:nisshi.io,2026-04:cluster:{os.path.abspath(self.root)}")
-            ),
-            "n_topics": len(topics),
-            "n_partitions": sum(self.describe_topic(t).partitions for t in topics),
-        }
 
     # ------------------------------------------------------------ broker config
     def _config_path(self) -> str:

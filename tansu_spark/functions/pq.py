@@ -88,7 +88,7 @@ def _books_df(spark, books: list[Codebook]):
         for cid, v in book
     ]
     return spark.createDataFrame(
-        rows, "sub int, code int, cvec array<double>, bias double"
+        rows, "sub int, code long, cvec array<double>, bias double"
     )
 
 
@@ -299,7 +299,7 @@ def pq_encode(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(id, codes array<int>, vnorm) — the 8-byte-per-vector index plus
+    """(id, codes array<long>, vnorm) — the 8-byte-per-vector index plus
     the stored norm the cosine denominator needs. Broadcast-join
     assignment + one max-struct shuffle + one collect_list shuffle; the
     plan is constant-size in n_sub x n_codes."""

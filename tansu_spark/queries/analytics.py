@@ -17,7 +17,7 @@ from tansu_spark.queries import query
 from tansu_spark.queries.kafka_ops import TOPIC_CTE
 from tansu_spark.queries.tpch import _ONE, _dec
 from tansu_spark.streaming.runner import run_available_now
-from tansu_spark.tables import load, load_stream
+from tansu_spark.tables import event_ts, load, load_stream
 from tansu_spark.materialize import corpus_checkpoint
 
 
@@ -248,7 +248,7 @@ def asof_join_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
-        F.timestamp_micros(F.expr("ts div 1000")).alias("ts"),
+        event_ts().alias("ts"),
     )
     dedup_w = Window.partitionBy("o_custkey", "o_orderdate").orderBy(
         F.desc("o_orderkey")
@@ -382,7 +382,7 @@ def events_sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
-        F.timestamp_micros(F.expr("ts div 1000")).alias("ts"),
+        event_ts().alias("ts"),
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(w))
@@ -433,9 +433,7 @@ def events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     (window semantics), and a gap exactly equal to 4h starts a new
     session (touching intervals do not overlap) — the oracle mirrors
     both conventions."""
-    ev = load(spark, sf_dir, "events").select(
-        "user_id", F.timestamp_micros(F.expr("ts div 1000")).alias("ts")
-    )
+    ev = load(spark, sf_dir, "events").select("user_id", event_ts().alias("ts"))
     return (
         ev.groupBy("user_id", F.session_window("ts", "4 hours").alias("sw"))
         .agg(F.count(F.lit(1)).alias("n_events"))
@@ -470,7 +468,7 @@ def events_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     count is the only expensive part (partial distinct aggregation);
     value sums are decimal-exact."""
     ev = load(spark, sf_dir, "events").select(
-        F.timestamp_micros(F.expr("ts div 1000")).alias("ts"),
+        event_ts().alias("ts"),
         "event_type",
         "user_id",
         "value",
@@ -746,7 +744,7 @@ def events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg is low-cardinality (weeks x offsets). `act` is tiny relative to
     raw events, so the self-use is cheap at any scale."""
     ev = load(spark, sf_dir, "events")
-    ts = F.timestamp_micros(F.expr("ts div 1000"))
+    ts = event_ts()
     act = ev.select("user_id", F.date_trunc("week", ts).alias("wk")).distinct()
     first = act.groupBy("user_id").agg(F.min("wk").alias("cohort_wk"))
     return (
@@ -1455,7 +1453,7 @@ def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tansu_spark.streaming.source import windowed_counts
 
     stream = load_stream(spark, sf_dir, "events").select(
-        F.timestamp_micros(F.expr("ts div 1000")).alias("timestamp"), "event_type"
+        event_ts().alias("timestamp"), "event_type"
     )
     agg = windowed_counts(stream, window="1 hour", keys=["event_type"])
     return run_available_now(agg, "stream_tumbling_oracle", "complete").select(
@@ -1493,7 +1491,7 @@ def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     def src() -> DataFrame:
         return load_stream(spark, sf_dir, "events").select(
             F.col("event_id"),
-            F.timestamp_micros(F.expr("ts div 1000")).alias("timestamp"),
+            event_ts().alias("timestamp"),
             F.col("event_type"),
         )
 
@@ -1516,7 +1514,7 @@ def _event_stream(spark: SparkSession, sf_dir: str, event_type: str) -> DataFram
         .select(
             "user_id",
             F.col("event_id"),
-            F.timestamp_micros(F.expr("ts div 1000")).alias("timestamp"),
+            event_ts().alias("timestamp"),
         )
     )
 
@@ -1762,7 +1760,7 @@ def streaming_ewma_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = load_stream(spark, sf_dir, "events").select(
         F.col("user_id").cast("string").alias("key"),
         F.col("value"),
-        F.timestamp_micros(F.expr("ts div 1000")).alias("timestamp"),
+        event_ts().alias("timestamp"),
         F.col("event_id").alias("offset"),
     )
     out = ewma_by_key(stream, alpha=0.25)
@@ -2003,7 +2001,7 @@ def events_sliding_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (window, type); the oracle expands via unnest of the two bucket
     starts — epoch-aligned exactly like Spark's slide alignment."""
     ev = load(spark, sf_dir, "events").select(
-        F.timestamp_micros(F.expr("ts div 1000")).alias("ts"),
+        event_ts().alias("ts"),
         "event_type",
         "value",
     )
@@ -2090,7 +2088,7 @@ def events_top_spenders_per_week(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(events). Decimal spend sums; ties broken by user_id; identical
     rank arithmetic both engines."""
     ev = load(spark, sf_dir, "events")
-    ts = F.timestamp_micros(F.expr("ts div 1000"))
+    ts = event_ts()
     wk = (
         ev.select("user_id", F.date_trunc("week", ts).alias("week_start"), "value")
         .groupBy("user_id", "week_start")
@@ -2131,7 +2129,7 @@ def events_cube_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     full lattice. Spark's grouping_id() bit order matches GROUPING(a)*2
     + GROUPING(b). DuckDB's dow (0=Sunday) equals Spark's dayofweek - 1."""
     ev = load(spark, sf_dir, "events")
-    ts = F.timestamp_micros(F.expr("ts div 1000"))
+    ts = event_ts()
     return (
         ev.select(
             "event_type", (F.dayofweek(ts) - 1).cast("int").alias("weekday")
@@ -2165,7 +2163,7 @@ def asof_join_next_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the time-to-conversion shape. Same one-shuffle union+window plan
     as the backward variant with the time order reversed; the oracle is
     DuckDB's native forward ASOF JOIN (v.ts <= p.pt)."""
-    ts = F.timestamp_micros(F.expr("ts div 1000"))
+    ts = event_ts()
     ev = load(spark, sf_dir, "events")
     views = ev.filter(F.col("event_type") == "view").select(
         "event_id", "user_id", ts.alias("ts")
@@ -2401,7 +2399,7 @@ def events_hourly_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     lo, hi = "2024-01-08", "2024-01-15"
-    ts = F.timestamp_micros(F.expr("ts div 1000"))
+    ts = event_ts()
     e = (
         load(spark, sf_dir, "events")
         .select("user_id", "event_id", "value", ts.alias("ts"))
@@ -2499,7 +2497,7 @@ def events_hourly_lerp(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     lo, hi = "2024-01-08", "2024-01-15"
-    ts = F.timestamp_micros(F.expr("ts div 1000"))
+    ts = event_ts()
     e = (
         load(spark, sf_dir, "events")
         .select("user_id", "event_id", "value", ts.alias("ts"))
@@ -2585,7 +2583,7 @@ def asof_join_tolerant_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound is a post-filter (the oracle wraps DuckDB's native ASOF JOIN
     in a CASE filter — a bare inequality would get folded into the ASOF
     ON clause, which DuckDB rejects)."""
-    ts = F.timestamp_micros(F.expr("ts div 1000"))
+    ts = event_ts()
     ev = load(spark, sf_dir, "events")
     views = ev.filter(F.col("event_type") == "view").select(
         "event_id", "user_id", ts.alias("ts")
@@ -2857,7 +2855,7 @@ def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     ev = load(spark, sf_dir, "events")
-    ts = F.timestamp_micros(F.expr("ts div 1000"))
+    ts = event_ts()
     w = Window.partitionBy("user_id").orderBy(ts.asc(), F.col("event_id").asc())
     seq = ev.select(
         "user_id", "event_type", F.lead("event_type").over(w).alias("next_type")
@@ -3214,7 +3212,7 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark; state per user is one open session, merged as events
     arrive."""
     stream = load_stream(spark, sf_dir, "events").select(
-        "user_id", F.timestamp_micros(F.expr("ts div 1000")).alias("timestamp")
+        "user_id", event_ts().alias("timestamp")
     )
     agg = stream.groupBy(
         F.session_window("timestamp", "30 minutes"), "user_id"
@@ -3267,7 +3265,7 @@ def events_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
     days = (
         ev.select(
-            F.to_date(F.timestamp_micros(F.expr("ts div 1000"))).alias("day"),
+            F.to_date(event_ts()).alias("day"),
             "user_id",
         )
         .distinct()
@@ -3315,7 +3313,7 @@ def events_weekly_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFram
     single groupBy on (week, type); per-group in-reducer sorts, no
     global shuffle."""
     ev = load(spark, sf_dir, "events")
-    week = F.date_trunc("week", F.timestamp_micros(F.expr("ts div 1000")))
+    week = F.date_trunc("week", event_ts())
     pcts = F.percentile("value", F.lit([0.5, 0.9, 0.99]))
     return (
         ev.select(week.alias("week"), "event_type", "value")

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from tansu_spark.operators import kafka as K
 from tansu_spark.queries import query
-from tansu_spark.tables import load
+from tansu_spark.tables import event_ts, load
 from tansu_spark.materialize import corpus_checkpoint
 
 # Shared oracle prelude: the topic view of `events`.
@@ -44,7 +44,7 @@ def events_topic(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("event_id div 8").cast("bigint").alias("offset"),
         # ts arrives as raw nanos (see tables.load); truncate to µs exactly
         # as DuckDB's parquet reader does.
-        F.timestamp_micros(F.expr("ts div 1000")).alias("timestamp"),
+        event_ts().alias("timestamp"),
         F.col("user_id").cast("string").alias("key"),
         F.col("props").alias("value"),
     )
@@ -247,7 +247,7 @@ def kafka_avro_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "user_id",
             "event_type",
-            F.timestamp_micros(F.expr("ts div 1000")).alias("at"),
+            event_ts().alias("at"),
         )
     )
 
@@ -597,7 +597,7 @@ def kafka_group_lag_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             ev.select(
                 F.col("user_id").cast("string").cast("binary").alias("key"),
                 F.col("props").cast("binary").alias("value"),
-                F.timestamp_micros(F.expr("ts div 1000")).alias("timestamp"),
+                event_ts().alias("timestamp"),
                 (F.col("event_id") % 4).cast("int").alias("partition"),
                 "event_id",
             )
@@ -686,7 +686,7 @@ def kafka_txn_visibility_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .select(
                     F.col("user_id").cast("string").cast("binary").alias("key"),
                     F.col("props").cast("binary").alias("value"),
-                    F.timestamp_micros(F.expr("ts div 1000")).alias("timestamp"),
+                    event_ts().alias("timestamp"),
                     (F.col("event_id") % 4).cast("int").alias("partition"),
                     "event_id",
                 )

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from tansu_spark.queries import query
 from tansu_spark.queries.kafka_ops import TOPIC_CTE, events_topic
-from tansu_spark.tables import load
+from tansu_spark.tables import event_ts, load
 from tansu_spark.materialize import corpus_checkpoint
 
 
@@ -381,9 +381,7 @@ def lake_partition_transforms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tansu_spark.functions.iceberg_hash import with_murmur3
     from tansu_spark.lake.sink import LakeSink
 
-    ev = load(spark, sf_dir, "events").withColumn(
-        "ts", F.timestamp_micros(F.expr("ts div 1000"))
-    )
+    ev = load(spark, sf_dir, "events").withColumn("ts", event_ts())
     ev = with_murmur3(ev, "user_id", "_uh")
     b = (
         F.col("_uh").cast("bigint").bitwiseAND(F.lit(2147483647).cast("bigint"))
@@ -580,7 +578,7 @@ def streaming_lake_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("props").cast("binary").alias("value"),
                 # ts contract: BIGINT nanos (tables.load) -> µs timestamp,
                 # exactly what DuckDB's parquet reader yields for MIN/MAX.
-                F.timestamp_micros(F.expr("ts div 1000")).alias("timestamp"),
+                event_ts().alias("timestamp"),
                 (F.col("event_id") % 4).cast("int").alias("partition"),
             ),
         )

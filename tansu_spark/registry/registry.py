@@ -10,8 +10,11 @@ columnar data for the lake (AsArrow, lib.rs:237-245).
 Spark-first shape: values travel as JSON bytes by default (the reference's
 own CLI produce path takes JSON and encodes per schema —
 nisshi-cat/src/produce.rs); decode = from_json into the schema-derived
-StructType; validation = a compiled JVM-side predicate (parse success +
-constraint subset).
+StructType; validation = one per-row validity column (`valid_column`)
+for every dialect: a compiled JVM-side predicate (parse success +
+constraint subset) for JSON, one Arrow-batched UDF for binary wire
+payloads and JSON schemas beyond the compiled subset. The broker counts
+that column inside its produce write job, so validation adds no job.
 
 Binary WIRE formats: topics can set ``tansu.schema.wire=avro`` to carry
 real Avro binary payloads (avro.rs:365-540 parity) — decoded by the pure
@@ -24,10 +27,12 @@ first.
 
 from __future__ import annotations
 
+import functools
 import os
 import time
-from typing import Any
+from typing import Any, Callable, Iterator
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, StringType, StructType
@@ -35,8 +40,11 @@ from pyspark.sql.types import DataType, StringType, StructType
 from tansu_spark.registry.types import (
     avro_to_spark,
     compile_constraints,
+    compile_scalar,
+    compile_type_strictness,
     json_schema_to_spark,
     load_schema_file,
+    shadow_numeric,
     unsupported_keywords,
 )
 
@@ -137,6 +145,64 @@ class TopicSchema:
         return F.lit(True)
 
 
+def _json_full_check(schema: dict) -> Callable[[], Callable[[bytes], None]]:
+    """Full-vocabulary JSON Schema check via the `jsonschema` package (the
+    reference's jsonschema crate semantics, json.rs:59-81): raises on an
+    invalid part. The schema dict travels; the validator compiles on the
+    executor."""
+
+    def build() -> Callable[[bytes], None]:
+        import json as _json
+
+        from jsonschema import Draft202012Validator
+
+        is_valid = Draft202012Validator(schema).is_valid
+
+        def check(raw: bytes) -> None:
+            text = raw.decode("utf-8")
+            try:
+                instance = _json.loads(text)
+            except ValueError:
+                # unparseable bytes are a bare STRING instance: the
+                # front-door convention types.py::compile_scalar documents
+                instance = text
+            if not is_valid(instance):
+                raise ValueError("fails the JSON schema")
+
+        return check
+
+    return build
+
+
+def _parts_valid(builds: list[Callable[[], Callable[[bytes], Any]]]):
+    """One scalar Arrow-batched UDF over the parts `builds` covers, in
+    order: a row is valid iff every non-null part's check returns without
+    raising. The iterator form builds each check (decoder, compiled
+    validator) once per UDF instance, not once per batch."""
+
+    def passes(check, raw) -> bool:
+        try:
+            check(bytes(raw))
+        except Exception:
+            return False
+        return True
+
+    def valid(batches: Iterator[tuple[pd.Series, ...]]) -> Iterator[pd.Series]:
+        checks = [build() for build in builds]
+        for cols in batches:
+            if isinstance(cols, pd.Series):  # a single part arrives bare
+                cols = (cols,)
+            yield pd.Series(
+                [
+                    all(raw is None or passes(c, raw) for c, raw in zip(checks, row))
+                    for row in zip(*cols)
+                ],
+                dtype=bool,
+            )
+
+    return F.pandas_udf(valid, "boolean")
+
+
 class SchemaRegistry:
     """Directory-backed registry with a TTL cache (lib.rs:491-569)."""
 
@@ -184,11 +250,6 @@ class SchemaRegistry:
                     # strictness additionally rejects present-but-mistyped
                     # / explicit-null typed fields that PERMISSIVE parsing
                     # disguises as absent (types.py — json.rs:59-81).
-                    from tansu_spark.registry.types import (
-                        compile_type_strictness,
-                        shadow_numeric,
-                    )
-
                     shadow = F.from_json(raw, shadow_numeric(st))
                     ok = F.col(which).isNull() | (
                         shadow.isNotNull()
@@ -197,9 +258,7 @@ class SchemaRegistry:
                     )
                 else:
                     # scalar part: uniform typed-JSON-or-bare-string
-                    # convention, shared with the fallback kernel
-                    from tansu_spark.registry.types import compile_scalar
-
+                    # convention, shared with the fallback check
                     ok = F.col(which).isNull() | compile_scalar(part, raw)
             elif isinstance(st, StructType):
                 parsed = F.from_json(raw, st)
@@ -212,33 +271,49 @@ class SchemaRegistry:
                     value.isNotNull() & ts.constraint(which, value)
                 )
             preds.append(ok)
-        if not preds:
-            return F.lit(True)
-        out = preds[0]
-        for p in preds[1:]:
-            out = out & p
-        return out
+        return functools.reduce(Column.__and__, preds) if preds else F.lit(True)
 
-    def validate(self, topic: str, df: DataFrame, wire: str = "json") -> None:
-        """Reject the batch if ANY record is invalid (lib.rs:571-599).
-        One aggregate over the batch — no row-at-a-time Python for the
-        JSON path; the avro wire path validates by spec-decode inside an
-        Arrow-batched kernel (decode failure = invalid record, exactly
-        the reference's Decoder-error path, avro.rs:365-540)."""
+    def valid_column(self, topic: str, df: DataFrame, wire: str = "json") -> Column:
+        """Per-row validity against the topic's schema (lib.rs:571-599),
+        True where the topic has none. The compiled `_valid_predicate`
+        serves JSON and scalar parts; avro/proto wire payloads and JSON
+        schemas beyond the compiled subset get ONE Arrow-batched UDF over
+        the present key/value parts — spec-decode success (decode failure
+        = invalid record, the reference's Decoder-error path,
+        avro.rs:365-540) or `jsonschema` is_valid (json.rs:59-81). The
+        column is only built here; it runs inside whatever job consumes
+        it (the broker counts it in its produce write job)."""
         ts = self.schema_for(topic)
         if ts is None:
-            return
+            return F.lit(True)
         if wire == ts.dialect and wire in ("avro", "proto"):
-            n_bad = self._wire_invalid_count(ts, df)
+            builds = {w: lambda d=dec: d for w, dec in self._wire_decoders(ts).items()}
         elif ts.dialect == "json" and ts.full_validator_keywords:
-            n_bad = self._json_full_invalid_count(ts, df)
+            builds = {
+                w: _json_full_check(ts._part(w))
+                for w in ("key", "value")
+                if ts._part(w) is not None
+            }
         else:
-            n_bad = df.filter(~self._valid_predicate(ts, df)).count()
+            return self._valid_predicate(ts, df)
+        present = [w for w in builds if w in df.columns]
+        if not present:
+            return F.lit(True)
+        return _parts_valid([builds[w] for w in present])(*map(F.col, present))
+
+    def rejection(self, topic: str, n_bad: int) -> ValidationError:
+        return ValidationError(
+            f"batch rejected: {n_bad} record(s) fail the "
+            f"{self.schema_for(topic).dialect} schema for topic {topic!r}"
+        )
+
+    def validate(self, topic: str, df: DataFrame, wire: str = "json") -> None:
+        """Reject the batch if ANY record is invalid (lib.rs:571-599): one
+        count of `valid_column`'s false rows. The broker does not call
+        this — its produce counts the same column inside the write job."""
+        n_bad = df.filter(~self.valid_column(topic, df, wire)).count()
         if n_bad:
-            raise ValidationError(
-                f"batch rejected: {n_bad} record(s) fail the {ts.dialect} "
-                f"schema for topic {topic!r}"
-            )
+            raise self.rejection(topic, n_bad)
 
     def _wire_decoders(self, ts: TopicSchema) -> dict[str, Any]:
         """Per-part ``bytes -> python value`` decode callables for the
@@ -259,81 +334,6 @@ class SchemaRegistry:
                 if msg in ts.raw["messages"]:
                     out[w] = (lambda m: lambda raw: codec.decode(m, raw))(msg)
         return out
-
-    def _wire_invalid_count(self, ts: TopicSchema, df: DataFrame) -> int:
-        decoders = self._wire_decoders(ts)
-        present = [w for w in decoders if w in df.columns]
-
-        def kernel(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                bad = 0
-                for w in present:
-                    dec = decoders[w]
-                    for raw in pdf[w]:
-                        if raw is None:
-                            continue
-                        try:
-                            dec(bytes(raw))
-                        except Exception:
-                            bad += 1
-                yield pd.DataFrame({"bad": [bad]})
-
-        counts = df.select(*present).mapInPandas(kernel, "bad long").collect()
-        return sum(r["bad"] for r in counts)
-
-    def _json_full_invalid_count(self, ts: TopicSchema, df: DataFrame) -> int:
-        """Full-vocabulary JSON Schema validation via the Python
-        `jsonschema` package (the same semantics as the reference's
-        jsonschema crate, json.rs:59-81) inside an Arrow-batched
-        mapInPandas kernel — used only for topics whose schema exceeds
-        the JVM-compiled subset. Schema dicts (plain JSON) travel to the
-        executors; validators are compiled once per kernel instance."""
-        schemas = {
-            w: ts._part(w)
-            for w in ("key", "value")
-            if ts._part(w) is not None and w in df.columns
-        }
-        if not schemas:
-            return 0
-
-        def kernel(batches):
-            import json as _json
-
-            import pandas as pd
-            from jsonschema import Draft202012Validator
-
-            validators = {w: Draft202012Validator(s) for w, s in schemas.items()}
-            for pdf in batches:
-                bad = 0
-                for w, v in validators.items():
-                    for raw in pdf[w]:
-                        if raw is None:
-                            continue
-                        try:
-                            text = bytes(raw).decode("utf-8")
-                        except UnicodeDecodeError:
-                            bad += 1
-                            continue
-                        try:
-                            instance = _json.loads(text)
-                        except ValueError:
-                            # uniform front-door convention, shared with
-                            # the compiled path (types.py::compile_scalar):
-                            # unparseable bytes are a bare STRING instance
-                            # — object/number schemas still reject it.
-                            # Documented divergence from the reference,
-                            # which never sees unparseable bytes because
-                            # its CLI JSON-encodes (produce.rs:168-174)
-                            # and rejects anything else (json.rs:65-69).
-                            instance = text
-                        if not v.is_valid(instance):
-                            bad += 1
-                yield pd.DataFrame({"bad": [bad]})
-
-        counts = df.select(*schemas).mapInPandas(kernel, "bad long").collect()
-        return sum(r["bad"] for r in counts)
 
     # ----------------------------------------------------------------- encode
     def encode_record(

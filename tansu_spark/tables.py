@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 TABLES = (
@@ -39,7 +39,7 @@ def _path(spark: SparkSession, sf_dir: str, name: str) -> str:
         # driver passes its own SparkSession) and TIMESTAMP(MICROS)
         # (read natively as timestamp_ntz, converted in _normalized; exact
         # under the UTC session timezone). Consumers convert with
-        # `ts div 1000` → timestamp_micros (exact integer division).
+        # `event_ts()`.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         # The ntz→timestamp cast reads the session timezone; pin it to
         # UTC so a driver-supplied session with a non-UTC tz does not
@@ -54,6 +54,11 @@ def _normalized(df: DataFrame, name: str) -> DataFrame:
             "ts", F.unix_micros(F.col("ts").cast("timestamp")) * F.lit(1000)
         )
     return df
+
+
+def event_ts() -> Column:
+    """events.ts (BIGINT nanoseconds) as a timestamp, exact to the µs."""
+    return F.timestamp_micros(F.expr("ts div 1000"))
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -240,6 +240,10 @@ def test_broker_avro_wire_rejects_garbage(avro_store):
         broker.produce_rows("reading", rows)
     assert broker.fetch("reading").count() == 0
 
+    from tests.broker_util import assert_reject_leaves_no_trace
+
+    assert_reject_leaves_no_trace(broker, "reading", rows, rows[:2], ValidationError)
+
 
 def test_avro_wire_validation_bypass(avro_store):
     """tansu.schema.validation=false skips the gate (FIXTURES.md §10) —

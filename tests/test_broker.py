@@ -751,6 +751,59 @@ def test_failed_produce_does_not_burn_idempotence_fence(spark, tmp_path):
     assert b.produce("t", good, producer_id=7, producer_epoch=0, base_sequence=10) == {}
 
 
+def test_unknown_partition_reject_leaves_no_orphan_segments(spark, tmp_path):
+    """A mixed batch with one row past the topic's partitions is rejected
+    AFTER its write; the reject path must scrub every segment it landed
+    (the in-range partition=0 file too), or the next produce's offsets
+    duplicate the orphan's."""
+    from tansu_spark.broker.broker import Broker
+
+    b = Broker(spark, str(tmp_path / "store"))
+    b.create_topic("t", partitions=1)
+    mixed = spark.createDataFrame(
+        [(b"k", b"v", 0), (b"k2", b"v", 5)], "key binary, value binary, partition int"
+    )
+    files_before = b._segment_files("t")
+    with pytest.raises(ValueError, match="unknown partition"):
+        b.produce("t", mixed)
+    assert b._segment_files("t") == files_before
+
+    b.produce_rows("t", _rows(2))
+    offs = sorted(r.offset for r in b.fetch("t").select("offset").collect())
+    assert offs == [0, 1]
+
+
+@pytest.mark.parametrize(
+    "n_schema",
+    [{"type": "integer", "minimum": 0}, {"oneOf": [{"type": "integer"}, {"type": "string"}]}],
+    ids=["compiled", "jsonschema"],
+)
+def test_validated_produce_runs_no_extra_jobs(spark, tmp_path, n_schema):
+    """Validation rides the produce write job: a produce to a schema'd
+    topic runs exactly as many Spark jobs as the same produce with
+    tansu.schema.validation=false — for the compiled predicate and for
+    the Arrow-batched UDF alike."""
+    import json
+
+    from tansu_spark.broker.broker import Broker
+    from tansu_spark.harness import timed
+    from tansu_spark.registry import SchemaRegistry
+
+    schemas = tmp_path / "schemas"
+    schemas.mkdir()
+    value = {"type": "object", "required": ["n"], "properties": {"n": n_schema}}
+    for topic in ("checked", "unchecked"):
+        (schemas / f"{topic}.json").write_text(
+            json.dumps({"type": "object", "properties": {"value": value}})
+        )
+    b = Broker(spark, str(tmp_path / "store"), registry=SchemaRegistry(str(schemas)))
+    b.create_topic("checked", partitions=2)
+    b.create_topic("unchecked", partitions=2, config={"tansu.schema.validation": "false"})
+    batch = b.rows_to_frame([{"key": f"k{i}", "value": json.dumps({"n": i})} for i in range(50)])
+    jobs = {t: timed(spark, t, lambda t=t: b.produce(t, batch))[1] for t in ("checked", "unchecked")}
+    assert jobs["checked"] == jobs["unchecked"], jobs
+
+
 def test_committed_pending_offsets_replayed_on_startup(spark, tmp_path):
     """ADVICE r2: crash between the committed state-flip and the staged
     consumer-offset apply must not drop the offsets — startup replays

@@ -197,6 +197,11 @@ def test_broker_proto_wire_roundtrip(spark, tmp_path):
             "cust", [{"key": rows[0]["key"], "value": b"\xff\xff\xff\xff"}]
         )
 
+    from tests.broker_util import assert_reject_leaves_no_trace
+
+    garbage = rows[:1] + [{"key": rows[0]["key"], "value": b"\xff\xff\xff\xff"}]
+    assert_reject_leaves_no_trace(broker, "cust", garbage, rows[:1], ValidationError)
+
 
 def test_broker_proto_enum_and_int_key(spark, tmp_path):
     """search.proto-shaped surface (etc/schema/search.proto: enum-typed

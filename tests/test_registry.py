@@ -159,6 +159,11 @@ def test_broker_produce_validates_and_decodes(spark, tmp_path, registry):
     )
     with pytest.raises(ValidationError):
         b.produce_rows("person", [{"key": "nope", "value": '{"firstName":"x","lastName":"y"}'}])
+    from tests.broker_util import assert_reject_leaves_no_trace
+
+    good = {"key": "123-45-6789", "value": '{"firstName":"x","lastName":"y","age":5}'}
+    bad = {"key": "nope", "value": '{"firstName":"x","lastName":"y"}'}
+    assert_reject_leaves_no_trace(b, "person", [good, bad], [good], ValidationError)
     # bypass switch (tansu.schema.validation=false)
     b.create_topic("person2", partitions=1, config={"tansu.schema.validation": "false"})
     os.link(

@@ -115,6 +115,17 @@ def test_uncompiled_keyword_falls_back_to_full_validator(spark, tmp_path):
     with pytest.raises(ValidationError, match="batch rejected"):
         reg.validate("t", _batch(spark, {"id": "ab"}))  # matches neither arm
 
+    # the broker's produce counts the same fallback validity in its write
+    from tansu_spark.broker import Broker
+    from tests.broker_util import assert_reject_leaves_no_trace
+
+    broker = Broker(spark, str(tmp_path / "store"), registry=reg)
+    broker.create_topic("t", partitions=1)
+    good, bad = ({"value": json.dumps({"id": v})} for v in (7, "ab"))
+    with pytest.raises(ValidationError, match="batch rejected: 1 record"):
+        broker.produce_rows("t", [good, bad])
+    assert_reject_leaves_no_trace(broker, "t", [good, bad], [good], ValidationError)
+
 
 def test_unparseable_json_rejected_on_fallback_path(spark, tmp_path):
     part = _obj("id", {"oneOf": [{"type": "integer"}]})

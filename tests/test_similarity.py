@@ -169,6 +169,31 @@ def test_fold_scorer_bit_identical_to_column_scorer(spark, sf_dir, id_offset):
         assert vn == pvn, (vid, vn, pvn)
 
 
+def test_pq_code_ids_past_int32(spark, sf_dir):
+    """PQ code ids are the seed rows' vector ids (long): training,
+    encoding and ADC serving on ids shifted past 2**31 give the plain
+    run's codebooks, codes and scores, shifted by the same offset."""
+    from tansu_spark.functions import pq as P
+
+    off = 2**32
+    emb = load(spark, sf_dir, "embeddings")
+    runs = {}
+    for shift in (0, off):
+        corpus = emb.withColumn("vec_id", F.col("vec_id") + F.lit(shift))
+        books = P.train_codebooks(corpus, n_sub=8, n_codes=16, n_iter=1)
+        enc = P.pq_encode(corpus, books)
+        top = P.pq_topk(enc, corpus.filter(F.col("vec_id") < shift + 4), books, k=3)
+        runs[shift] = (
+            [[(cid - shift, v) for cid, v in book] for book in books],
+            {r["vec_id"] - shift: [c - shift for c in r["codes"]] for r in enc.collect()},
+            sorted(
+                (r["query_id"] - shift, r["vec_id"] - shift, r["approx_cosine"])
+                for r in top.collect()
+            ),
+        )
+    assert runs[off] == runs[0]
+
+
 def test_grouped_fold_scorer_matches_driver_model_fold(spark, sf_dir):
     """ivf_assign_fold_grouped (DISTRIBUTED centroid table, cogrouped on
     the coarse key) must produce bit-identical assignments and scores to
