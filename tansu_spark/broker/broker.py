@@ -39,7 +39,9 @@ Scale design:
 from __future__ import annotations
 
 import contextlib
+import glob
 import os
+import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -155,9 +157,7 @@ class Broker:
         LSO down and previously-aborted ranges silently become visible
         to read_committed on an upgraded store. Conflicting terminal
         states for the same txn_id across topics fail loudly."""
-        import glob as _glob
-
-        legacy = sorted(_glob.glob(os.path.join(self.root, "topics", "*", "txns.json")))
+        legacy = sorted(glob.glob(os.path.join(self.root, "topics", "*", "txns.json")))
         if not legacy:
             return
         with file_lock(self._txn_lock_path()):
@@ -215,8 +215,6 @@ class Broker:
         )
 
     def delete_topic(self, topic: str) -> None:
-        import shutil
-
         shutil.rmtree(self._topic_dir(topic))
 
     def topics(self) -> list[str]:
@@ -456,7 +454,7 @@ class Broker:
             # Idempotence fence — CHECKED here, but the advanced fence is
             # persisted only after the produce fully succeeds (with the
             # watermark bump below): advancing it eagerly meant a produce
-            # that failed mid-flight (e.g. raced-terminal txn scrub) burned
+            # that failed mid-flight (e.g. a raced-terminal txn) burned
             # the sequence, so the client's retry of the same batch was
             # silently dropped as a duplicate even though its records never
             # landed — retry-after-error lost data.
@@ -527,69 +525,85 @@ class Broker:
             # footers carry the codec per column chunk, the exact
             # mechanism the reference's record-batch attribute plays).
             codec = _PARQUET_CODECS[cfg.config.get("compression.type", "producer")]
-            # Snapshot segments BEFORE the write: the one reject path below
-            # scrubs exactly the files this produce landed (we hold the
-            # topic lock — no concurrent writer).
-            pre_files = self._segment_files(topic)
-            with contextlib.ExitStack() as txn_locked:
-                try:
-                    # One write task per Kafka partition: without this,
-                    # AQE coalesces the offset-window's 8 small shuffle
-                    # partitions into ONE post-shuffle task (batch bytes <
-                    # the 64 MB advisory size), serializing parquet
-                    # encoding — measured 25k rec/s single-task vs ~2x
-                    # with per-partition tasks at batch 50k. The explicit
-                    # repartition pins parallelism to the topic's
-                    # partition count AND yields exactly one segment file
-                    # per (produce, partition) — fewer files for fetch and
-                    # the segment-stats manifest.
-                    observed.repartition(cfg.partitions, F.col("partition")).write.mode(
-                        "append"
-                    ).option(
-                        "compression", codec
-                    ).partitionBy("partition").parquet(self._data_dir(topic))
-                    got = obs.get
-                    if int(got["bad"]):
-                        raise self.registry.rejection(topic, int(got["bad"]))
-                    counts = {
-                        p: int(got[f"p{p}"])
-                        for p in range(cfg.partitions)
-                        if int(got[f"p{p}"]) > 0
-                    }
-                    if sum(counts.values()) != int(got["total"]):
-                        raise ValueError(
-                            f"produce to {topic!r}: rows target partitions outside "
-                            f"[0, {cfg.partitions}) — unknown partition, like the "
-                            "reference's UNKNOWN_TOPIC_OR_PARTITION"
-                        )
-                    if txn_id is not None:
-                        # AddPartitionsToTxn (lib.rs:1480-1517): the
-                        # terminal-txn re-check, range registration AND the
-                        # watermark bump all happen under the STORE-GLOBAL
-                        # txn lock — if EndTxn/the sweep flipped the txn
-                        # terminal while the segment write ran, the produce
-                        # is rejected below WITHOUT bumping the watermark.
-                        txn_locked.enter_context(file_lock(self._txn_lock_path()))
-                        txns = read_json(self._txns_path(), {})
-                        t = txns.setdefault(
-                            txn_id,
-                            {"state": "open", "topics": {}, "started_at": time.time()},
-                        )
-                        if t["state"] != "open":
-                            raise InvalidTxnState(
-                                f"produce into {t['state']} txn {txn_id!r}"
-                            )
-                except BaseException:
-                    # The one reject path (invalid records, unknown
-                    # partitions, a raced-terminal txn): remove what the
-                    # write landed and re-raise. The watermark never moved,
-                    # so nothing invalid became visible, and the next
-                    # produce reuses these offsets against a clean
-                    # directory — an orphan segment would duplicate them.
-                    self._scrub_segments(topic, self._segment_files(topic) - pre_files)
-                    raise
+            # Stage, then publish: Spark's file index and stream source skip
+            # "_" dirs, so no reader that lists the data dir without the
+            # watermark (records(), topic_stream, the lake sink) sees a
+            # batch before it passed every check. Under the topic lock the
+            # staging dir is ours: anything in it is a produce that died.
+            staging = os.path.join(self._data_dir(topic), "_staging")
+            shutil.rmtree(staging, ignore_errors=True)
+            try:
+                # One write task per Kafka partition: without this, AQE
+                # coalesces the offset-window's 8 small shuffle partitions
+                # into ONE post-shuffle task (batch bytes < the 64 MB
+                # advisory size), serializing parquet encoding — measured
+                # 25k rec/s single-task vs ~2x with per-partition tasks at
+                # batch 50k. The explicit repartition pins parallelism to
+                # the topic's partition count AND yields exactly one
+                # segment file per (produce, partition) — fewer files for
+                # fetch and the segment-stats manifest.
+                observed.repartition(cfg.partitions, F.col("partition")).write.mode(
+                    "append"
+                ).option(
+                    "compression", codec
+                ).partitionBy("partition").parquet(staging)
+                got = obs.get
+                if int(got["bad"]):
+                    raise self.registry.rejection(topic, int(got["bad"]))
+                counts = {
+                    p: int(got[f"p{p}"])
+                    for p in range(cfg.partitions)
+                    if int(got[f"p{p}"]) > 0
+                }
+                if sum(counts.values()) != int(got["total"]):
+                    raise ValueError(
+                        f"produce to {topic!r}: rows target partitions outside "
+                        f"[0, {cfg.partitions}) — unknown partition, like the "
+                        "reference's UNKNOWN_TOPIC_OR_PARTITION"
+                    )
+                result, published = self._publish(
+                    topic, staging, counts, marks, fences, txn_id
+                )
+            finally:
+                # The one reject path (invalid records, unknown partitions,
+                # a raced-terminal txn): a rejected batch never left staging.
+                shutil.rmtree(staging, ignore_errors=True)
+            self._refresh_segment_stats(topic, published)
+        return result
 
-                # The commit point: nothing from here on is scrubbed.
+    def _publish(
+        self, topic: str, staging: str, counts: dict[int, int], marks: dict,
+        fences: dict | None, txn_id: str | None,
+    ) -> tuple[dict[int, int], list[str]]:
+        """Move a staged produce's segments into the topic's partition=N
+        dirs and bump the watermarks. For a transactional produce the
+        terminal-txn re-check, range registration AND the watermark bump
+        run under the STORE-GLOBAL txn lock (AddPartitionsToTxn,
+        lib.rs:1480-1517): if EndTxn/the sweep flipped the txn terminal
+        while the write ran, nothing is published. A failure before the
+        commit point removes what was moved, so no segment ever sits above
+        the watermark, where the next produce would reuse its offsets.
+        Returns the base offsets and the published segment paths."""
+        txn_lock = self._txn_lock_path() if txn_id is not None else None
+        with file_lock(txn_lock) if txn_lock else contextlib.nullcontext():
+            if txn_id is not None:
+                txns = read_json(self._txns_path(), {})
+                t = txns.setdefault(
+                    txn_id,
+                    {"state": "open", "topics": {}, "started_at": time.time()},
+                )
+                if t["state"] != "open":
+                    raise InvalidTxnState(f"produce into {t['state']} txn {txn_id!r}")
+            data = self._data_dir(topic)
+            published: list[str] = []
+            try:
+                # Segments only; Spark's checksum siblings stay behind, as
+                # in the lake's rewrites (readers need none).
+                for src in glob.glob(os.path.join(staging, "partition=*", "*.parquet")):
+                    dst = os.path.join(data, os.path.relpath(src, staging))
+                    os.makedirs(os.path.dirname(dst), exist_ok=True)
+                    os.rename(src, dst)
+                    published.append(dst)
                 result: dict[int, int] = {}
                 for p, n in counts.items():
                     m = marks.setdefault(str(p), {"low": 0, "high": 0})
@@ -604,9 +618,13 @@ class Broker:
                         lo, _ = ranges.get(str(p), [result[p], result[p]])
                         ranges[str(p)] = [min(lo, result[p]), result[p] + n]
                     write_json_atomic(self._txns_path(), txns)
-                self._commit_marks_and_fences(topic, marks, fences)
-            self._refresh_segment_stats(topic)
-        return result
+            except BaseException:
+                for f in published:
+                    os.remove(f)
+                raise
+            # The commit point: nothing from here on is undone.
+            self._commit_marks_and_fences(topic, marks, fences)
+        return result, published
 
     def _commit_marks_and_fences(
         self, topic: str, marks: dict, fences: dict | None
@@ -773,13 +791,13 @@ class Broker:
         data = self._data_dir(topic)
         if not any(e.startswith("partition=") for e in os.listdir(data)):
             return self.spark.createDataFrame([], RECORD_SCHEMA)
-        # ignoreMissingFiles: a raced-terminal-txn scrub (or a retention/
-        # compaction rewrite) may os.remove a segment between this reader's
-        # directory listing and the task actually opening the file; fetch
-        # takes no topic lock, so the read path must tolerate the vanish
-        # instead of failing mid-scan. Scrubbed records were never inside
-        # the visible offset space (the watermark only bumps on success),
-        # so skipping the vanished file never drops a committed record.
+        # ignoreMissingFiles: a retention/compaction rewrite (or a publish
+        # undone before its watermark commit) may os.remove a segment
+        # between this reader's directory listing and the task actually
+        # opening the file; fetch takes no topic lock, so the read path
+        # must tolerate the vanish instead of failing mid-scan. An undone
+        # publish never entered the visible offset space (the watermark
+        # only bumps on success), so skipping it drops no committed record.
         df = (
             self.spark.read.schema(RECORD_SCHEMA)
             .option("ignoreMissingFiles", "true")
@@ -801,50 +819,36 @@ class Broker:
         return os.path.join(self._data_dir(topic), "_segment_stats.json")
 
     def _segment_files(self, topic: str) -> set[str]:
-        """Absolute paths of every parquet segment in the topic's data dir
-        (driver-side listing: the segment-stats manifest, fetch pruning,
-        and the produce reject path's before/after snapshot)."""
+        """Absolute paths of every published parquet segment in the topic's
+        data dir (driver-side listing: the segment-stats manifest and fetch
+        pruning). Like Spark's file index, it skips "_" dirs: a produce's
+        _staging and a rewrite's _rewrite-* hold no visible segments."""
         out: set[str] = set()
-        for root, _dirs, names in os.walk(self._data_dir(topic)):
+        for root, dirs, names in os.walk(self._data_dir(topic)):
+            dirs[:] = [d for d in dirs if not d.startswith("_")]
             out.update(
                 os.path.join(root, n) for n in names if n.endswith(".parquet")
             )
         return out
 
-    def _scrub_segments(self, topic: str, files: set[str]) -> None:
-        """Remove the segments a rejected produce landed, plus the write's
-        leftovers: the _SUCCESS marker Spark drops at the data
-        root and any partition=N directory the scrub emptied. Readers that
-        already listed these files tolerate the removal via
-        ignoreMissingFiles on every broker scan."""
-        data = self._data_dir(topic)
-        for f in files:
-            try:
-                os.remove(f)
-            except FileNotFoundError:
-                pass
-        marker = os.path.join(data, "_SUCCESS")
-        if files and os.path.exists(marker):
-            os.remove(marker)
-        for entry in os.listdir(data):
-            sub = os.path.join(data, entry)
-            if entry.startswith("partition=") and os.path.isdir(sub) and not os.listdir(sub):
-                os.rmdir(sub)
-
-    def _refresh_segment_stats(self, topic: str) -> None:
-        """Footer-read segments that appeared since the last refresh; drop
-        entries for segments that vanished (compaction/retention rewrites).
-        Called under the topic lock from produce; Maintainer rewrites call
-        it too. Cost: one ~KB metadata read per NEW file only."""
+    def _refresh_segment_stats(self, topic: str, new: list[str] | None = None) -> None:
+        """Footer-read segments the manifest lacks. Produce passes the
+        segments it just published (``new``), so it lists nothing;
+        Maintainer rewrites pass nothing, and the whole data dir is
+        re-listed, dropping entries for segments that vanished. Called
+        under the topic lock. Cost: one ~KB metadata read per NEW file."""
         import pyarrow.parquet as pq
 
         data = self._data_dir(topic)
         manifest = read_json(self._segment_stats_path(topic), {"files": {}})
-        seen = {}
-        for path in self._segment_files(topic):
+        files = manifest["files"]
+        if new is None:
+            new = self._segment_files(topic)
+            live = {os.path.relpath(path, data) for path in new}
+            files = {rel: st for rel, st in files.items() if rel in live}
+        for path in new:
             rel = os.path.relpath(path, data)
-            if rel in manifest["files"]:
-                seen[rel] = manifest["files"][rel]
+            if rel in files:
                 continue
             md = pq.ParquetFile(path).metadata
             idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
@@ -857,8 +861,8 @@ class Broker:
                         break
                     lo = st.min if lo is None else min(lo, st.min)
                     hi = st.max if hi is None else max(hi, st.max)
-            seen[rel] = {"offset": [lo, hi]}
-        manifest["files"] = seen
+            files[rel] = {"offset": [lo, hi]}
+        manifest["files"] = files
         write_json_atomic(self._segment_stats_path(topic), manifest)
 
     def _pruned_records(self, topic: str, offset_lo: int) -> DataFrame | None:
@@ -879,7 +883,7 @@ class Broker:
             return self.spark.createDataFrame([], RECORD_SCHEMA)
         # basePath keeps partition=N directory discovery over the file list.
         # ignoreMissingFiles for the same reason as records(): concurrent
-        # scrubs/rewrites may remove a listed segment before a task opens it.
+        # rewrites may remove a listed segment before a task opens it.
         return (
             self.spark.read.schema(RECORD_SCHEMA)
             .option("basePath", data)

@@ -668,11 +668,10 @@ def test_txn_produce_raced_terminal_leaves_no_orphan_records(spark, tmp_path):
 
     class RacingBroker(Broker):
         """Flips the txn aborted between the upfront check and the
-        under-lock re-check (the pre-write segment snapshot is the first
+        under-lock re-check (the publish of the staged write is the first
         hook inside that window)."""
 
-        def _segment_files(self, topic):
-            files = super()._segment_files(topic)
+        def _publish(self, topic, *args):
             if getattr(self, "_race_once", False):
                 self._race_once = False
                 from tansu_spark.broker.state import file_lock, read_json, write_json_atomic
@@ -681,7 +680,7 @@ def test_txn_produce_raced_terminal_leaves_no_orphan_records(spark, tmp_path):
                     txns = read_json(self._txns_path(), {})
                     txns["racy2"]["state"] = "aborted"
                     write_json_atomic(self._txns_path(), txns)
-            return files
+            return super()._publish(topic, *args)
 
     b = RacingBroker(spark, str(tmp_path / "store"))
     b.create_topic("t", partitions=1)
@@ -771,6 +770,67 @@ def test_unknown_partition_reject_leaves_no_orphan_segments(spark, tmp_path):
     b.produce_rows("t", _rows(2))
     offs = sorted(r.offset for r in b.fetch("t").select("offset").collect())
     assert offs == [0, 1]
+
+
+def test_rejected_batch_never_visible_to_readers(spark, tmp_path, monkeypatch):
+    """Readers that list the data dir without the watermark (records(),
+    topic_stream's file source, the lake sink's typed_records) must not
+    see a rejected batch, not even while the produce checks it: the write
+    stages under data/_staging, and only a batch that passed is published.
+    A produce that died mid-write leaves its staging behind, equally
+    unseen, and the next produce clears it."""
+    import json
+    import os
+
+    from pyspark.sql import Observation
+
+    from tansu_spark.broker import broker as broker_mod
+    from tansu_spark.broker.broker import Broker
+    from tansu_spark.registry import SchemaRegistry
+    from tansu_spark.registry.registry import ValidationError
+
+    schemas = tmp_path / "schemas"
+    schemas.mkdir()
+    (schemas / "t.json").write_text(json.dumps({
+        "type": "object",
+        "properties": {"value": {"type": "object", "required": ["n"],
+                                 "properties": {"n": {"type": "integer"}}}},
+    }))
+    b = Broker(spark, str(tmp_path / "store"), registry=SchemaRegistry(str(schemas)))
+    b.create_topic("t", partitions=1)
+    b.produce_rows("t", [{"key": "k", "value": json.dumps({"n": i})} for i in range(2)])
+    files_before = b._segment_files("t")
+
+    seen = []
+
+    class Peek(Observation):
+        """Lists and reads the topic the moment the write job finished,
+        before the produce has checked the batch."""
+
+        @property
+        def get(self):
+            seen.append((b._segment_files("t"), b.records("t").count()))
+            return super().get
+
+    monkeypatch.setattr(broker_mod, "Observation", Peek)
+    with pytest.raises(ValidationError):
+        b.produce_rows("t", [{"key": "k", "value": json.dumps({"n": "x"})}])
+    mixed = spark.createDataFrame(
+        [(b"k", b'{"n": 1}', 0), (b"k2", b'{"n": 2}', 5)],
+        "key binary, value binary, partition int",
+    )
+    with pytest.raises(ValueError, match="unknown partition"):
+        b.produce("t", mixed)
+    assert seen == [(files_before, 2), (files_before, 2)]
+    monkeypatch.undo()
+
+    staging = os.path.join(b._data_dir("t"), "_staging")
+    b.records("t").write.partitionBy("partition").parquet(staging)  # a dead produce
+    assert b._segment_files("t") == files_before
+    assert b.records("t").count() == 2
+    b.produce_rows("t", [{"key": "k", "value": json.dumps({"n": 9})}])
+    assert not os.path.exists(staging)
+    assert sorted(r.offset for r in b.fetch("t").select("offset").collect()) == [0, 1, 2]
 
 
 @pytest.mark.parametrize(
