@@ -62,6 +62,7 @@ from pyspark.sql.types import (
 
 from tansu_spark import metrics as M
 from tansu_spark.broker.state import file_lock, read_json, write_json_atomic
+from tansu_spark.lake import stats
 from tansu_spark.operators import kafka as K
 
 # Wire-record envelope (FIXTURES.md; inflated.rs:66-109).
@@ -599,8 +600,8 @@ class Broker:
             try:
                 # Segments only; Spark's checksum siblings stay behind, as
                 # in the lake's rewrites (readers need none).
-                for src in glob.glob(os.path.join(staging, "partition=*", "*.parquet")):
-                    dst = os.path.join(data, os.path.relpath(src, staging))
+                for rel in stats.live_files(staging):
+                    src, dst = os.path.join(staging, rel), os.path.join(data, rel)
                     os.makedirs(os.path.dirname(dst), exist_ok=True)
                     os.rename(src, dst)
                     published.append(dst)
@@ -787,108 +788,46 @@ class Broker:
 
     def records(self, topic: str) -> DataFrame:
         """The raw topic DataFrame (all partitions, uncommitted included)."""
-        self.describe_topic(topic)  # clean KeyError for unknown topics
-        data = self._data_dir(topic)
-        if not any(e.startswith("partition=") for e in os.listdir(data)):
-            return self.spark.createDataFrame([], RECORD_SCHEMA)
-        # ignoreMissingFiles: a retention/compaction rewrite (or a publish
-        # undone before its watermark commit) may os.remove a segment
-        # between this reader's directory listing and the task actually
-        # opening the file; fetch takes no topic lock, so the read path
-        # must tolerate the vanish instead of failing mid-scan. An undone
-        # publish never entered the visible offset space (the watermark
-        # only bumps on success), so skipping it drops no committed record.
-        df = (
-            self.spark.read.schema(RECORD_SCHEMA)
-            .option("ignoreMissingFiles", "true")
-            .parquet(data)
-        )
-        return df
+        return self._pruned_records(topic, 0)
 
     # ----------------------------------------------------- segment offset stats
-    # Per-segment offset ranges, harvested from parquet FOOTERS (driver-side
-    # metadata read — no Spark job, no data IO) after every produce. The
-    # manifest is the broker's equivalent of Kafka's segment index / the
-    # reference's watermark-bounded fetch SQL (record_fetch*.sql): a fetch
-    # from offset N opens only segments whose [min,max] range reaches N,
-    # instead of listing-and-footer-reading every segment in the topition.
-    # Advisory only — segments missing from the manifest are always read,
-    # and the offset predicate is still applied to survivors.
+    # Per-segment offset ranges in the lake's file index (lake/stats.py),
+    # harvested from parquet FOOTERS after every produce. The manifest is
+    # the broker's equivalent of Kafka's segment index / the reference's
+    # watermark-bounded fetch SQL (record_fetch*.sql): a fetch from offset
+    # N opens only segments whose [min,max] range reaches N. Advisory
+    # only: segments missing from the manifest are always read, and fetch
+    # re-applies the offset predicate to survivors.
 
     def _segment_stats_path(self, topic: str) -> str:
         return os.path.join(self._data_dir(topic), "_segment_stats.json")
 
     def _segment_files(self, topic: str) -> set[str]:
-        """Absolute paths of every published parquet segment in the topic's
-        data dir (driver-side listing: the segment-stats manifest and fetch
-        pruning). Like Spark's file index, it skips "_" dirs: a produce's
-        _staging and a rewrite's _rewrite-* hold no visible segments."""
-        out: set[str] = set()
-        for root, dirs, names in os.walk(self._data_dir(topic)):
-            dirs[:] = [d for d in dirs if not d.startswith("_")]
-            out.update(
-                os.path.join(root, n) for n in names if n.endswith(".parquet")
-            )
-        return out
+        """Absolute paths of every published segment: the index's listing
+        rule, so a produce's _staging and a rewrite's _rewrite-* are out."""
+        data = self._data_dir(topic)
+        return {os.path.join(data, rel) for rel in stats.live_files(data)}
 
     def _refresh_segment_stats(self, topic: str, new: list[str] | None = None) -> None:
-        """Footer-read segments the manifest lacks. Produce passes the
-        segments it just published (``new``), so it lists nothing;
-        Maintainer rewrites pass nothing, and the whole data dir is
-        re-listed, dropping entries for segments that vanished. Called
-        under the topic lock. Cost: one ~KB metadata read per NEW file."""
-        import pyarrow.parquet as pq
+        """Produce passes the segments it just published (``new``), so it
+        lists nothing; Maintainer rewrites pass nothing, and the data dir
+        is re-listed. Called under the topic lock."""
+        stats.refresh(self._segment_stats_path(topic), ["offset"], new)
 
+    def _pruned_records(self, topic: str, offset_lo: int) -> DataFrame:
+        """Records DataFrame over the segments whose offset range reaches
+        `offset_lo`: the index's one pruned read, a directory read when
+        no segment is skipped. Its ignoreMissingFiles drops no committed
+        record: a segment removed under a reader is a rewrite's input or
+        an undone publish, which never entered the watermark."""
+        self.describe_topic(topic)  # clean KeyError for unknown topics
         data = self._data_dir(topic)
-        manifest = read_json(self._segment_stats_path(topic), {"files": {}})
-        files = manifest["files"]
-        if new is None:
-            new = self._segment_files(topic)
-            live = {os.path.relpath(path, data) for path in new}
-            files = {rel: st for rel, st in files.items() if rel in live}
-        for path in new:
-            rel = os.path.relpath(path, data)
-            if rel in files:
-                continue
-            md = pq.ParquetFile(path).metadata
-            idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            lo = hi = None
-            if "offset" in idx:
-                for g in range(md.num_row_groups):
-                    st = md.row_group(g).column(idx["offset"]).statistics
-                    if st is None or not st.has_min_max:
-                        lo = hi = None
-                        break
-                    lo = st.min if lo is None else min(lo, st.min)
-                    hi = st.max if hi is None else max(hi, st.max)
-            files[rel] = {"offset": [lo, hi]}
-        manifest["files"] = files
-        write_json_atomic(self._segment_stats_path(topic), manifest)
-
-    def _pruned_records(self, topic: str, offset_lo: int) -> DataFrame | None:
-        """Records DataFrame over only the segments whose offset range
-        reaches `offset_lo`, or None when there is no manifest to prune
-        with. Unknown segments are kept; correctness never depends on the
-        manifest (fetch re-applies the offset predicate)."""
-        manifest = read_json(self._segment_stats_path(topic), None)
-        if manifest is None:
-            return None
-        data = self._data_dir(topic)
-        keep = []
-        for path in self._segment_files(topic):
-            st = manifest["files"].get(os.path.relpath(path, data))
-            if st is None or st["offset"][1] is None or st["offset"][1] >= offset_lo:
-                keep.append(path)
-        if not keep:
+        if not any(e.startswith("partition=") for e in os.listdir(data)):
             return self.spark.createDataFrame([], RECORD_SCHEMA)
-        # basePath keeps partition=N directory discovery over the file list.
-        # ignoreMissingFiles for the same reason as records(): concurrent
-        # rewrites may remove a listed segment before a task opens it.
-        return (
-            self.spark.read.schema(RECORD_SCHEMA)
-            .option("basePath", data)
-            .option("ignoreMissingFiles", "true")
-            .parquet(*sorted(keep))
+        return stats.scan(
+            self.spark.read.schema(RECORD_SCHEMA),
+            self._segment_stats_path(topic),
+            {"offset": (offset_lo, None)},
         )
 
     def typed_records(self, topic: str) -> DataFrame:
@@ -908,8 +847,6 @@ class Broker:
         """{fingerprint: raw avsc} of every schema version that produced
         into this topic (snapshots written by produce) — the lookup table
         reader-schema resolution needs to decode pre-migration segments."""
-        import glob
-
         out: dict[str, object] = {}
         for p in glob.glob(self._state(topic, "schema-*.json")):
             fp = os.path.basename(p)[len("schema-"):-len(".json")]
@@ -964,11 +901,7 @@ class Broker:
         `topic/KEY` virtual-topic syntax and the max_bytes running budget."""
         name, key = self._parse_topic_key(topic)
         marks = read_json(self._state(name, "watermarks.json"), {})
-        df = self._pruned_records(name, offset) if offset > 0 else None
-        if df is None:
-            df = self.records(name)
-        else:
-            self.describe_topic(name)  # same unknown-topic contract
+        df = self._pruned_records(name, offset)
 
         # Frontier: map partition → exclusive upper bound.
         if isolation == "read_committed":

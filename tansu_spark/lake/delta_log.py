@@ -58,7 +58,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from tansu_spark.lake.snapshots import HISTORY_DIR, load_manifest
+from tansu_spark.lake.snapshots import load_manifest
+from tansu_spark.lake.stats import footer_stats, live_files, partition_values
 
 DELTA_LOG_DIR = "_delta_log"
 _ENGINE = "tansu-spark"
@@ -99,83 +100,6 @@ def _last_checkpoint_version(table_dir: str) -> int:
     return int(json.load(open(p))["version"])
 
 
-def _partition_values(rel: str) -> dict[str, str]:
-    """Hive-style `col=value` directory segments -> partitionValues map
-    (the spec's map<string,string>; values stay URL-decoded strings)."""
-    out: dict[str, str] = {}
-    for seg in rel.replace(os.sep, "/").split("/")[:-1]:
-        if "=" in seg and not seg.startswith(("_", ".")):
-            k, _, v = seg.partition("=")
-            out[k] = urllib.parse.unquote(v)
-    return out
-
-
-def _json_safe(v: Any) -> Any:
-    """Footer statistics value -> JSON-safe scalar (spec stats are plain
-    JSON). Binary and exotic types return None => the column is skipped,
-    which readers treat as 'no stats' (never wrong, just not skippable)."""
-    import datetime
-    import decimal
-
-    if isinstance(v, float) and (v != v or v in (float("inf"), float("-inf"))):
-        return None  # NaN/Inf have no strict-JSON form -> no stats
-    if isinstance(v, (bool, int, float, str)):
-        return v
-    if isinstance(v, decimal.Decimal):
-        return float(v)
-    if isinstance(v, (datetime.datetime, datetime.date)):
-        return v.isoformat()
-    return None
-
-
-def _file_stats(path: str) -> dict[str, Any]:
-    """Per-file stats from the parquet FOOTER only: numRecords plus
-    min/max/nullCount per top-level leaf column (nested columns and
-    columns with missing footer stats are skipped)."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
-    mins: dict[str, Any] = {}
-    maxs: dict[str, Any] = {}
-    nulls: dict[str, int] = {}
-    skip: set[str] = set()
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for c in range(g.num_columns):
-            col = g.column(c)
-            name = col.path_in_schema
-            if "." in name or name in skip:  # nested leaf -> skip
-                continue
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                skip.add(name)
-                for d in (mins, maxs, nulls):
-                    d.pop(name, None)
-                continue
-            lo, hi = _json_safe(st.min), _json_safe(st.max)
-            if lo is None or hi is None:
-                skip.add(name)
-                for d in (mins, maxs, nulls):
-                    d.pop(name, None)
-                continue
-            mins[name] = lo if name not in mins else min(mins[name], lo)
-            maxs[name] = hi if name not in maxs else max(maxs[name], hi)
-            if st.null_count is None:
-                # ANY row group without a null count makes the column's
-                # total unknowable — an undercount would let readers
-                # wrongly prune IS NULL predicates, so drop it entirely
-                # (None marks it dropped for later row groups).
-                nulls[name] = None  # type: ignore[assignment]
-            elif nulls.get(name, 0) is not None:
-                nulls[name] = nulls.get(name, 0) + st.null_count
-    return {
-        "numRecords": md.num_rows,
-        "minValues": mins,
-        "maxValues": maxs,
-        "nullCount": {k: v for k, v in nulls.items() if v is not None},
-    }
-
-
 def _add_action(table_dir: str, rel: str, with_stats: bool) -> dict[str, Any]:
     if rel.startswith(".."):
         # Shallow-clone external ref: absolute file URI (spec-permitted;
@@ -187,13 +111,13 @@ def _add_action(table_dir: str, rel: str, with_stats: bool) -> dict[str, Any]:
         path = urllib.parse.quote(rel.replace(os.sep, "/"))
     add: dict[str, Any] = {
         "path": path,
-        "partitionValues": _partition_values(rel),
+        "partitionValues": partition_values(rel),
         "size": os.path.getsize(abs_path),
         "modificationTime": int(os.path.getmtime(abs_path) * 1000),
         "dataChange": True,
     }
     if with_stats:
-        add["stats"] = json.dumps(_file_stats(abs_path), sort_keys=True)
+        add["stats"] = json.dumps(footer_stats(abs_path), sort_keys=True)
     return add
 
 
@@ -215,11 +139,7 @@ def export_delta_log(
         os.path.join(table_dir, "_dv"),
         os.path.join(os.path.dirname(os.path.abspath(table_dir)), "_dv"),
     )
-    if any(
-        os.path.isdir(dv)
-        and any(n.endswith(".parquet") for n in os.listdir(dv))
-        for dv in candidates
-    ):
+    if any(live_files(dv) for dv in candidates):
         raise RuntimeError(
             f"{table_dir} has live merge-on-read deletion vectors (_dv/),"
             " which are not Delta's DV format — a Delta reader of the"
@@ -301,7 +221,7 @@ def export_delta_log(
                 reader = reader.option("basePath", table_dir)
             schema = reader.parquet(*schema_src).schema
             part_cols = sorted(
-                {k for f in entry["files"] for k in _partition_values(f)}
+                {k for f in entry["files"] for k in partition_values(f)}
             )
             actions += [
                 {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
@@ -344,7 +264,7 @@ def export_delta_log(
                 stats_ok = False
                 a = {
                     "path": urllib.parse.quote(rel.replace(os.sep, "/")),
-                    "partitionValues": _partition_values(rel),
+                    "partitionValues": partition_values(rel),
                     "size": 0,
                     "modificationTime": ts_ms,
                     "dataChange": True,

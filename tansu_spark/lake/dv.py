@@ -33,6 +33,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tansu_spark.lake.stats import live_files
+
 _FILE = "_dv_file"
 _POS = "_dv_pos"
 
@@ -70,9 +72,7 @@ class DvTable:
         )
 
     def _dv(self) -> DataFrame | None:
-        if not os.path.isdir(self.dv_dir) or not any(
-            f.endswith(".parquet") for f in os.listdir(self.dv_dir)
-        ):
+        if not live_files(self.dv_dir):
             return None
         return self.spark.read.parquet(self.dv_dir)
 

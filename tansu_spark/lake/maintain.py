@@ -21,30 +21,35 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tansu_spark.lake.stats import collect_stats, live_files, load_stats
 
-def _partition_dirs(table_dir: str) -> list[str]:
-    out = []
-    for root, dirs, files in os.walk(table_dir):
-        if any(f.endswith(".parquet") for f in files):
-            out.append(root)
-        dirs[:] = [d for d in dirs if not d.startswith("_")]
+
+def _partition_dirs(table_dir: str) -> dict[str, list[str]]:
+    """{partition directory: its live parquet files (absolute)}, by the
+    file index's listing rule."""
+    out: dict[str, list[str]] = {}
+    for rel in live_files(table_dir):
+        path = os.path.join(table_dir, rel)
+        out.setdefault(os.path.dirname(path), []).append(path)
     return out
 
 
-def _data_files(d: str) -> list[str]:
-    return [f for f in os.listdir(d) if f.endswith(".parquet")]
-
-
 def _rewrite_dir(
-    spark: SparkSession, d: str, transform, n_files: int, table_root: str | None = None
-) -> None:
-    """Atomically replace a partition directory's parquet files with the
-    transformed, re-bucketed contents. When `table_root` points at a table
-    with a snapshot manifest, replaced files move to its `_history/` batch
-    (older versions stay readable) instead of being deleted."""
+    spark: SparkSession,
+    d: str,
+    old: list[str],
+    transform,
+    n_files: int,
+    table_root: str | None = None,
+) -> int:
+    """Atomically replace the partition directory `d`'s files `old` with
+    their transformed, re-bucketed contents; returns the files written.
+    When `table_root` points at a table with a snapshot manifest, replaced
+    files move to its `_history/` batch (older versions stay readable)
+    instead of being deleted."""
     from tansu_spark.lake import snapshots as snap
 
-    df = spark.read.parquet(d)
+    df = spark.read.parquet(*old)
     out = transform(df) if transform else df
     if table_root is not None:
         # Re-attach the table's persisted Iceberg field ids: Spark's
@@ -59,16 +64,16 @@ def _rewrite_dir(
             out = apply_field_ids(out, ids)
     tmp = os.path.join(d, f"_rewrite-{uuid.uuid4().hex}")
     out.coalesce(max(n_files, 1)).write.mode("overwrite").parquet(tmp)
-    old = _data_files(d)
-    for f in os.listdir(tmp):
-        if f.endswith(".parquet"):
-            os.replace(os.path.join(tmp, f), os.path.join(d, f"part-{uuid.uuid4().hex}.parquet"))
+    written = live_files(tmp)
+    for rel in written:
+        os.replace(os.path.join(tmp, rel), os.path.join(d, f"part-{uuid.uuid4().hex}.parquet"))
     if table_root is not None and snap.load_manifest(table_root) is not None:
-        snap.relocate_for_rewrite(table_root, [os.path.join(d, f) for f in old])
+        snap.relocate_for_rewrite(table_root, old)
     else:
         for f in old:
-            os.unlink(os.path.join(d, f))
+            os.unlink(f)
     shutil.rmtree(tmp, ignore_errors=True)
+    return len(written)
 
 
 def compact_table(
@@ -78,14 +83,14 @@ def compact_table(
     each partition directory, merge small files into ~target_bytes files.
     Returns {partition_dir: files_removed}."""
     stats: dict[str, int] = {}
-    for d in _partition_dirs(table_dir):
-        files = _data_files(d)
-        total = sum(os.path.getsize(os.path.join(d, f)) for f in files)
+    for d, files in _partition_dirs(table_dir).items():
+        total = sum(os.path.getsize(f) for f in files)
         want = max(1, math.ceil(total / target_bytes))
         if len(files) <= want:
             continue
-        _rewrite_dir(spark, d, None, want, table_root=table_dir)
-        stats[d] = len(files) - len(_data_files(d))
+        stats[d] = len(files) - _rewrite_dir(
+            spark, d, files, None, want, table_root=table_dir
+        )
     if stats:
         from tansu_spark.lake import snapshots as snap
 
@@ -131,9 +136,8 @@ def zorder_table(
     directory ordered by the interleaved key so multi-column range
     predicates prune row groups. Returns partitions rewritten."""
     n = 0
-    for d in _partition_dirs(table_dir):
-        files = _data_files(d)
-        total = sum(os.path.getsize(os.path.join(d, f)) for f in files)
+    for d, files in _partition_dirs(table_dir).items():
+        total = sum(os.path.getsize(f) for f in files)
         want = max(1, math.ceil(total / target_bytes))
 
         def order(df: DataFrame) -> DataFrame:
@@ -154,7 +158,10 @@ def zorder_table(
                 .drop("_z")
             )
 
-        _rewrite_dir(spark, d, order if want == 1 else order_multi, want, table_root=table_dir)
+        _rewrite_dir(
+            spark, d, files, order if want == 1 else order_multi, want,
+            table_root=table_dir,
+        )
         n += 1
     if n:
         from tansu_spark.lake import snapshots as snap
@@ -180,15 +187,16 @@ def retention_sweep(broker, topic: str, now_ms: int | None = None) -> int:
     deleted = 0
     with file_lock(broker._state(topic, ".lock")):
         data = broker._data_dir(topic)
-        for d in _partition_dirs(data):
-            df = broker.spark.read.parquet(d)
+        for d, files in _partition_dirs(data).items():
+            df = broker.spark.read.parquet(*files)
             n_old = df.filter(F.col("timestamp") < cutoff).count()
             if n_old:
                 _rewrite_dir(
                     broker.spark,
                     d,
+                    files,
                     lambda x: x.filter(F.col("timestamp") >= cutoff),
-                    max(1, len(_data_files(d)) // 2),
+                    max(1, len(files) // 2),
                 )
                 deleted += n_old
         # advance low watermarks to the first surviving offset
@@ -217,7 +225,7 @@ def compact_topic(broker, topic: str) -> int:
 
     removed = 0
     with file_lock(broker._state(topic, ".lock")):
-        for d in _partition_dirs(broker._data_dir(topic)):
+        for d, files in _partition_dirs(broker._data_dir(topic)).items():
             w = Window.partitionBy("key").orderBy(F.desc("offset"))
 
             def keep_latest(df: DataFrame) -> DataFrame:
@@ -227,11 +235,11 @@ def compact_topic(broker, topic: str) -> int:
                     .drop("_rn")
                 )
 
-            df = broker.spark.read.parquet(d)
+            df = broker.spark.read.parquet(*files)
             before = df.count()
             after = df.select("key").distinct().count()
             if after < before:
-                _rewrite_dir(broker.spark, d, keep_latest, 1)
+                _rewrite_dir(broker.spark, d, files, keep_latest, 1)
                 removed += before - after
         broker._refresh_segment_stats(topic)
     return removed
@@ -304,14 +312,9 @@ class Maintainer:
                             # Refresh the data-skipping manifest if this
                             # table keeps one: the rewrites above changed
                             # file boundaries.
-                            from tansu_spark.lake.stats import (
-                                collect_stats,
-                                load_stats,
-                            )
-
                             stats = load_stats(table)
                             if stats is not None:
-                                collect_stats(
+                                stats = collect_stats(
                                     self.broker.spark, table, stats["columns"]
                                 )
                                 r["stats_files"] = len(stats["files"])

@@ -33,6 +33,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from tansu_spark.broker.state import read_json, write_json_atomic
+from tansu_spark.lake.stats import live_files
 
 SNAPSHOTS_NAME = "_snapshots.json"
 HISTORY_DIR = "_history"
@@ -46,17 +47,6 @@ def load_manifest(table_dir: str) -> dict[str, Any] | None:
     return read_json(_manifest_path(table_dir), None)
 
 
-def _live_files(table_dir: str) -> list[str]:
-    out = []
-    for root, dirs, names in os.walk(table_dir):
-        # Skip metadata/history subtrees the same way Spark does.
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for n in names:
-            if n.endswith(".parquet"):
-                out.append(os.path.relpath(os.path.join(root, n), table_dir))
-    return sorted(out)
-
-
 def commit_snapshot(table_dir: str, operation: str = "append", force: bool = False) -> int:
     """Record the current live file set as the next table version.
     Returns the new version number. Idempotent for an unchanged file set
@@ -64,7 +54,7 @@ def commit_snapshot(table_dir: str, operation: str = "append", force: bool = Fal
     by RESTORE, which like Delta always records the operation even when
     the restored file set equals the current one."""
     doc = read_json(_manifest_path(table_dir), {"versions": [], "relocations": {}})
-    files = _live_files(table_dir)
+    files = live_files(table_dir)
     if doc["versions"]:
         # SHALLOW-CLONE support: external references (paths escaping the
         # table root, written by clone_shallow) are not found by the
@@ -226,7 +216,7 @@ def restore_version(table_dir: str, version: int) -> int:
     # history so the versions that reference them keep resolving.
     displaced = [
         os.path.join(table_dir, rel)
-        for rel in _live_files(table_dir)
+        for rel in live_files(table_dir)
         if rel not in target
     ]
     if displaced:

@@ -807,8 +807,8 @@ def lake_clone_shallow(spark: SparkSession, sf_dir: str) -> DataFrame:
     clone_shallow — Delta's `CREATE TABLE ... SHALLOW CLONE`, which the
     reference inherits through delta-rs): commit orders into a source
     table, clone it WITHOUT copying a byte (the gated n_files_copied
-    column counts parquet files physically under the clone root at clone
-    time — zero), append a slice (orderkey % 7 = 0) to the CLONE only,
+    column counts the clone root's live parquet files at clone time —
+    zero), append a slice (orderkey % 7 = 0) to the CLONE only,
     and read both tables back: the source must still aggregate to the
     untouched original, the clone to original + slice — divergent
     histories over shared physical files. Expiring clone snapshots can
@@ -819,13 +819,12 @@ def lake_clone_shallow(spark: SparkSession, sf_dir: str) -> DataFrame:
     version's file list — O(files) paths, no data moved; clone appends
     are ordinary local writes whose commits carry the external refs
     forward."""
-    import glob as _glob
-
     from tansu_spark.lake.snapshots import (
         clone_shallow,
         commit_snapshot,
         read_snapshot,
     )
+    from tansu_spark.lake.stats import live_files
 
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
@@ -838,9 +837,7 @@ def lake_clone_shallow(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.repartition(3).write.mode("append").parquet(src)
         commit_snapshot(src, "append")  # src v0
         clone_shallow(src, dst)
-        n_copied = len(
-            _glob.glob(f"{dst}/**/*.parquet", recursive=True)
-        )
+        n_copied = len(live_files(dst))
         orders.where(F.col("o_orderkey") % 7 == 0).write.mode("append").parquet(dst)
         commit_snapshot(dst, "append")  # clone v1: local files + external refs
         s = (

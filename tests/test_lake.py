@@ -240,6 +240,154 @@ def test_maintainer_refreshes_stats_manifest(stack):
     assert after > before  # manifest rebuilt over the rewritten files
 
 
+def _append_range(spark, table, lo, hi):
+    spark.range(lo, hi).selectExpr("id AS k", "id * 2 AS v").coalesce(
+        1
+    ).write.mode("append").parquet(table)
+
+
+def test_collect_stats_is_jobless_and_incremental(spark, tmp_path, monkeypatch):
+    """The refresh is footer reads on the driver (no Spark job); a second
+    refresh reads only files the manifest lacks and drops the entries of
+    files a rewrite removed."""
+    from tansu_spark import harness
+    from tansu_spark.lake import stats
+    from tansu_spark.lake.stats import collect_stats, live_files, load_stats
+
+    table = str(tmp_path / "tbl")
+    for lo in (0, 100, 200):
+        _append_range(spark, table, lo, lo + 100)
+    _, n_jobs = harness.timed(
+        spark, "collect_stats", lambda: collect_stats(spark, table, ["k"])
+    )
+    assert n_jobs == 0
+    assert sorted(load_stats(table)["files"]) == live_files(table)
+
+    reads = []
+    real = stats.footer_stats
+    monkeypatch.setattr(
+        stats, "footer_stats", lambda p: reads.append(p) or real(p)
+    )
+    before = set(live_files(table))
+    _append_range(spark, table, 300, 400)
+    collect_stats(spark, table, ["k"])
+    (added,) = set(live_files(table)) - before
+    assert reads == [os.path.join(table, added)]
+    assert load_stats(table)["files"][added]["k"] == [300, 399]
+
+    reads.clear()
+    compact_table(spark, table)  # 4 files -> 1, the old ones deleted
+    (merged,) = live_files(table)
+    collect_stats(spark, table, ["k"])
+    assert reads == [os.path.join(table, merged)]
+    assert load_stats(table)["files"] == {merged: {"k": [0, 399]}}
+
+
+def test_footer_timestamps_are_never_pruned(spark, tmp_path):
+    """Footer timestamps render as ISO-8601 strings that do not order like
+    Spark's timestamp strings: the manifest keeps no stats for them, so a
+    string predicate reads every file rather than dropping matching rows."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tansu_spark.lake.stats import collect_stats, load_stats, pruned_read
+
+    table = tmp_path / "tbl"
+    table.mkdir()
+    t0 = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
+    for i in range(2):
+        ts = [t0 + datetime.timedelta(hours=4 * i + h) for h in range(4)]
+        pq.write_table(
+            pa.table({"ts": pa.array(ts, pa.timestamp("us", tz="UTC"))}),
+            str(table / f"part-{i}.parquet"),
+        )
+    collect_stats(spark, str(table), ["ts"])
+    assert all(
+        st["ts"] == [None, None] for st in load_stats(str(table))["files"].values()
+    )
+    pred = {"ts": (None, "2024-01-01 05:00:00")}
+    got = pruned_read(spark, str(table), pred)
+    expect = spark.read.parquet(str(table)).filter("ts <= '2024-01-01 05:00:00'")
+    assert len(got.inputFiles()) == 2
+    assert sorted(got.collect()) == sorted(expect.collect())
+
+
+def test_live_files_matches_spark_listing(spark, tmp_path):
+    """The index lists exactly the files Spark's file index reads: no
+    history, rewrite, staging or delta-log parquet, no hidden dirs, no
+    _SUCCESS or .crc siblings."""
+    import glob
+    import shutil
+    import urllib.parse
+
+    from tansu_spark.lake.stats import live_files
+
+    table = str(tmp_path / "tbl")
+    spark.range(0, 40).selectExpr("id AS k", "id % 2 AS p").write.partitionBy(
+        "p"
+    ).parquet(table)
+    part = glob.glob(os.path.join(table, "p=0", "*.parquet"))[0]
+    for sub in ("_history/b1/p=0", "_rewrite-x", "_staging/partition=0",
+                "_delta_log", ".hidden"):
+        os.makedirs(os.path.join(table, sub))
+        shutil.copy(part, os.path.join(table, sub, "x.parquet"))
+    assert os.path.exists(os.path.join(table, "_SUCCESS"))
+    assert glob.glob(os.path.join(table, "p=0", ".*.crc"))
+
+    spark_files = sorted(
+        os.path.relpath(urllib.parse.unquote(urllib.parse.urlparse(u).path), table)
+        for u in spark.read.parquet(table).inputFiles()
+    )
+    assert live_files(table) == spark_files
+    assert len(spark_files) == len(glob.glob(os.path.join(table, "p=*", "*.parquet")))
+
+
+def test_pruned_read_after_compaction_skips_history(spark, tmp_path):
+    """A snapshot-versioned table relocates compacted-away files into
+    _history/; the pruned read must not read them back (it used to return
+    every matching row twice), nor an exported _delta_log checkpoint."""
+    from tansu_spark.lake.delta_log import export_delta_log, write_checkpoint
+    from tansu_spark.lake.snapshots import commit_snapshot
+    from tansu_spark.lake.stats import collect_stats, load_stats, pruned_read
+
+    table = str(tmp_path / "tbl")
+    for lo in (0, 100, 200, 300):
+        _append_range(spark, table, lo, lo + 100)
+        commit_snapshot(table)
+    compact_table(spark, table)
+    assert os.listdir(os.path.join(table, "_history"))
+    for lo in (400, 500):  # files the narrow predicate can skip
+        _append_range(spark, table, lo, lo + 100)
+        commit_snapshot(table)
+
+    def check():
+        collect_stats(spark, table, ["k"])
+        assert not any(
+            rel.startswith("_") for rel in load_stats(table)["files"]
+        )
+        for lo, hi in ((120, 180), (450, 460)):
+            got = pruned_read(spark, table, {"k": (lo, hi)})
+            assert not any(
+                "/_history/" in f or "/_delta_log/" in f for f in got.inputFiles()
+            )
+            assert len(got.inputFiles()) == 1
+            expect = spark.read.parquet(table).filter(f"k between {lo} and {hi}")
+            assert sorted(r["k"] for r in got.collect()) == sorted(
+                r["k"] for r in expect.collect()
+            ) == list(range(lo, hi + 1))
+
+    check()
+    export_delta_log(spark, table)
+    write_checkpoint(table)
+    assert any(
+        n.endswith(".checkpoint.parquet")
+        for n in os.listdir(os.path.join(table, "_delta_log"))
+    )
+    check()
+
+
 def test_partition_transforms_route_files(spark, tmp_path):
     """Hidden partitioning: bucket/day transforms in tansu.lake.partition
     route files into derived directories; readers reconstruct the routing
