@@ -35,11 +35,7 @@ def _partition_dirs(table_dir: str) -> dict[str, list[str]]:
 
 
 def _rewrite_dir(
-    spark: SparkSession,
-    d: str,
-    old: list[str],
-    transform,
-    n_files: int,
+    spark: SparkSession, d: str, old: list[str], transform, n_files: int,
     table_root: str | None = None,
 ) -> int:
     """Atomically replace the partition directory `d`'s files `old` with

@@ -26,8 +26,8 @@ whose offset range reaches N). Both are this module's manifest:
   the predicate intervals on the driver; `scan` is the one pruned read.
 
 Pruning is advisory, never a correctness gate: a missing manifest, a
-file missing from it, or a column without footer min/max (INT96
-timestamps, binary values, strings over 4 KB) keeps the file, and every
+file missing from it, or a column without comparable footer min/max
+(timestamps, binary values, strings over 4 KB) keeps the file, and every
 caller re-applies its predicate to the survivors. Combined with
 zorder_table (which co-locates correlated ranges per file), a narrow
 predicate touches O(matching) files instead of O(all).
@@ -44,9 +44,6 @@ from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
 
 from tansu_spark.broker.state import read_json, write_json_atomic
-
-STATS_NAME = "_stats.json"
-
 
 def _hidden(name: str) -> bool:
     """Spark's file-index filter: `_*` (unless a `k=v` partition dir)
@@ -157,18 +154,10 @@ def _typed(v: str) -> Any:
 
 
 def _orderable(v: Any) -> Any:
-    """A footer value pruning can compare, else None (no stats). Footer
-    timestamps arrive as ISO-8601 UTC strings ('T', offset), which do
-    not order against Spark's `yyyy-MM-dd HH:mm:ss` timestamp strings."""
-    import datetime
-
-    if isinstance(v, str) and v[10:11] == "T":
-        try:
-            datetime.datetime.fromisoformat(v)
-            return None
-        except ValueError:
-            pass
-    return v
+    """None for a footer timestamp: it arrives as an ISO-8601 UTC string
+    ('T', offset) that does not order against Spark's `yyyy-MM-dd
+    HH:mm:ss` strings. A string value shaped like one loses its stats too."""
+    return None if isinstance(v, str) and v[10:11] == "T" else v
 
 
 def _entry(root: str, rel: str, cols: list[str]) -> dict[str, list[Any]]:
@@ -257,11 +246,10 @@ def scan(
 
 
 # ------------------------------------------------ lake-table entry points
-# A lake table keeps its manifest as `<table_dir>/_stats.json`.
 
 
 def _stats_path(table_dir: str) -> str:
-    return os.path.join(table_dir, STATS_NAME)
+    return os.path.join(table_dir, "_stats.json")
 
 
 def collect_stats(
