@@ -212,6 +212,9 @@ class SchemaRegistry:
         self.root = root
         self.ttl = ttl_seconds
         self._cache: dict[str, tuple[float, TopicSchema | None]] = {}
+        # topic -> (built-under key, validity Column): building the
+        # compiled predicate costs hundreds of py4j calls per produce
+        self._valid: dict[str, tuple[tuple, Column]] = {}
 
     def schema_for(self, topic: str) -> TopicSchema | None:
         hit = self._cache.get(topic)
@@ -282,10 +285,25 @@ class SchemaRegistry:
         = invalid record, the reference's Decoder-error path,
         avro.rs:365-540) or `jsonschema` is_valid (json.rs:59-81). The
         column is only built here; it runs inside whatever job consumes
-        it (the broker counts it in its produce write job)."""
+        it (the broker counts it in its produce write job). The built
+        column is cached per topic and reused while the schema version,
+        the wire, the present parts and the SparkContext (whose JVM holds
+        the column and its UDF) stay the same."""
         ts = self.schema_for(topic)
         if ts is None:
             return F.lit(True)
+        key = (
+            df.sparkSession.sparkContext,
+            ts.fingerprint(),
+            wire,
+            tuple(c for c in ("key", "value") if c in df.columns),
+        )
+        hit = self._valid.get(topic)
+        if hit is None or hit[0] != key:
+            hit = self._valid[topic] = (key, self._build_valid(ts, df, wire))
+        return hit[1]
+
+    def _build_valid(self, ts: TopicSchema, df: DataFrame, wire: str) -> Column:
         if wire == ts.dialect and wire in ("avro", "proto"):
             builds = {w: lambda d=dec: d for w, dec in self._wire_decoders(ts).items()}
         elif ts.dialect == "json" and ts.full_validator_keywords:

@@ -14,6 +14,11 @@ Design notes for 100 TB / 1000-executor deployments (tested on local[N]):
   24% slower on the stateful queries at sf0.1, where state is tiny. For
   state larger than the heap, pass the RocksDB
   ``spark.sql.streaming.stateStore.providerClass`` via ``extra_conf``.
+- AQE does not reach stateful streaming: its state partition count is the
+  ``spark.sql.shuffle.partitions`` set at a query's first start. The
+  drained oracle runs (``streaming.run_available_now``) size it to their
+  input rows, capped at the default parallelism; checkpointed sinks keep
+  the session's value.
 """
 
 from __future__ import annotations

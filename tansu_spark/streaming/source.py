@@ -120,8 +120,10 @@ def sessionize(
 ) -> DataFrame:
     """Gap-based sessionization.
 
-    Streaming: applyInPandasWithState custom stateful operator (timeout-
-    driven session close). Batch: the classic window trick — a session id
+    Streaming: applyInPandasWithState custom stateful operator (event-
+    time timeout: a session closes when the watermark passes its last
+    event + gap, so a drained ``availableNow`` run stops once the
+    watermark stops moving). Batch: the classic window trick — a session id
     is the running count of gap-breaks per key — same output schema, used
     by tests to cross-check the stateful path.
     """
@@ -154,8 +156,6 @@ def sessionize(
 
     def update(key, pdfs, state: GroupState):
         (k,) = key
-        rows = pd.concat(list(pdfs))
-        ts = pd.to_datetime(rows["timestamp"]).sort_values()
         if state.hasTimedOut:
             start, end, n = state.get
             state.remove()
@@ -168,6 +168,8 @@ def sessionize(
                 }
             )
             return
+        rows = pd.concat(list(pdfs))
+        ts = pd.to_datetime(rows["timestamp"]).sort_values()
         closed = []
         if state.exists:
             start, end, n = state.get
@@ -182,7 +184,8 @@ def sessionize(
             end = t_us
             n += 1
         state.update((start, end, n))
-        state.setTimeoutDuration(gap_seconds * 1000)
+        # the open session closes once the watermark passes its end + gap
+        state.setTimeoutTimestamp(end // 1000 + gap_seconds * 1000)
         if closed:
             yield pd.DataFrame(
                 {
@@ -202,7 +205,7 @@ def sessionize(
             outputStructType=_SESSION_SCHEMA,
             stateStructType="start long, end long, n long",
             outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
 

@@ -21,3 +21,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(autouse=True)
+def no_leaked_streaming_queries():
+    """Fail a test that leaves a streaming query running (after stopping
+    it): a leaked query keeps running micro-batches and slows every later
+    test in the process. Starts no SparkContext of its own."""
+    yield
+    from pyspark import SparkContext
+    from pyspark.sql import SparkSession
+
+    if SparkContext._active_spark_context is None:
+        return
+    spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
+    leaked = spark.streams.active
+    for q in leaked:
+        q.stop()
+    if leaked:
+        pytest.fail(f"streaming queries left running: {[q.name for q in leaked]}")

@@ -178,3 +178,38 @@ def test_broker_produce_validates_and_decodes(spark, tmp_path, registry):
     typed = b.typed_records("person").first()
     assert typed.value.firstName == "x"
     assert typed.meta.partition == 0 and typed.meta.year >= 2024
+
+
+def test_valid_column_built_once_per_schema_version(spark, tmp_path, monkeypatch):
+    """Produces reuse the built validity column; a changed schema file
+    (TTL expired) builds it again, and the rebuilt column still rejects."""
+    import json
+    import shutil
+
+    from tests.broker_util import assert_reject_leaves_no_trace
+
+    schemas = tmp_path / "schemas"
+    schemas.mkdir()
+    shutil.copy(os.path.join(SCHEMA_DIR, "person.json"), schemas / "person.json")
+    reg = SchemaRegistry(str(schemas), ttl_seconds=0.0)
+    builds = []
+    build = SchemaRegistry._build_valid
+
+    def counting(self, *args):
+        builds.append(args[0].fingerprint())
+        return build(self, *args)
+
+    monkeypatch.setattr(SchemaRegistry, "_build_valid", counting)
+    b = Broker(spark, str(tmp_path / "store"), registry=reg)
+    b.create_topic("person", partitions=1)
+    good = {"key": "123-45-6789", "value": '{"firstName":"x","lastName":"y","age":4}'}
+    b.produce_rows("person", [good])
+    b.produce_rows("person", [good])
+    assert len(builds) == 1
+
+    schema = json.loads((schemas / "person.json").read_text())
+    schema["properties"]["value"]["properties"]["age"]["maximum"] = 150
+    (schemas / "person.json").write_text(json.dumps(schema))
+    old = {"key": "123-45-6789", "value": '{"firstName":"x","lastName":"y","age":200}'}
+    assert_reject_leaves_no_trace(b, "person", [old], [good], ValidationError)
+    assert len(builds) == 2 and builds[0] != builds[1]

@@ -147,7 +147,13 @@ def test_sessionize_batch_and_stream_agree(broker, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    try:
+        q.awaitTermination(120)
+        # event-time timeouts: the drained run stops once the watermark
+        # stops moving, instead of wanting another no-data batch forever
+        assert not q.isActive
+    finally:
+        q.stop()
     closed = {
         (r.key, r.n_events)
         for r in broker.spark.sql("select * from sessions_mem").collect()
@@ -513,3 +519,87 @@ def test_run_available_now_restores_shuffle_partitions_on_failure(spark, sf_dir)
     with pytest.raises(Exception, match="boom"):
         run_available_now(failing, "run_available_now_failing", "append")
     assert spark.conf.get(key) == before
+
+
+def test_state_partitions_floor_ceiling_and_cap():
+    from tansu_spark.streaming.runner import ROWS_PER_STATE_PARTITION as R
+    from tansu_spark.streaming.runner import state_partitions
+
+    assert state_partitions(0, 8) == 1  # floor
+    assert state_partitions(1, 8) == 1
+    assert state_partitions(R, 8) == 1
+    assert state_partitions(R + 1, 8) == 2  # ceiling
+    assert state_partitions(3 * R, 8) == 3
+    assert state_partitions(100 * R, 8) == 8  # cap
+    assert state_partitions(100 * R, 2) == 2
+    assert state_partitions(None, 8) == 8  # unknown input size: the cap
+
+
+def test_source_rows_counts_stream_file_sources_only(spark, sf_dir):
+    from tansu_spark.streaming.runner import source_rows, state_partitions
+    from tansu_spark.tables import load, load_stream
+
+    n = load(spark, sf_dir, "events").count()
+    events = load_stream(spark, sf_dir, "events")
+    assert source_rows(events) == n
+    both = events.unionByName(load_stream(spark, sf_dir, "events"))
+    assert source_rows(both) == 2 * n
+    nation = load(spark, sf_dir, "nation")  # a static side is not stream input
+    enriched = events.join(nation, events.user_id == nation.n_nationkey)
+    assert source_rows(enriched) == n
+
+    rate = spark.readStream.format("rate").load().select(F.col("value").alias("x"))
+    mixed = events.select(F.col("event_id").alias("x")).unionByName(rate)
+    cap = spark.sparkContext.defaultParallelism
+    for stream in (rate, mixed):
+        assert source_rows(stream) is None
+        assert state_partitions(source_rows(stream), cap) == cap
+
+
+def test_tiny_drain_uses_one_state_partition_and_reports_progress(spark, sf_dir):
+    """A tiny file stream runs its stateful aggregation on one state
+    partition, and the run's batch phases reach `tansu_spark.metrics`."""
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from tansu_spark import metrics as M
+    from tansu_spark.streaming import run_available_now
+    from tansu_spark.tables import load, load_stream
+
+    seen: list[int] = []
+
+    class Listener(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            if event.progress.name == "tiny_state_drain":
+                seen.extend(op.numShufflePartitions for op in event.progress.stateOperators)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    before = M.snapshot()
+    listener = Listener()
+    spark.streams.addListener(listener)
+    try:
+        counts = run_available_now(
+            load_stream(spark, sf_dir, "events").groupBy("event_type").count(),
+            "tiny_state_drain",
+            "complete",
+        )
+        n = load(spark, sf_dir, "events").count()
+        assert sum(r["count"] for r in counts.collect()) == n
+        deadline = time.time() + 30
+        while not seen and time.time() < deadline:
+            time.sleep(0.2)  # listener events arrive asynchronously
+    finally:
+        spark.streams.removeListener(listener)
+    assert seen and set(seen) == {1}
+    after = M.snapshot()
+    for name in ("streaming_addBatch_duration", "streaming_state_commit_duration"):
+        assert after[name]["count"] > before.get(name, {"count": 0})["count"]
